@@ -73,15 +73,24 @@ object Bench {
       qIndex += 1
       starts(name) = (System.nanoTime() - sweepT0) / 1e9
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      // a query that throws is FAILED — never timed as a success
+      val rows = try Some(fn(spark, sfDir).count())
+        catch { case _: Throwable => None }
       val dt = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftCaches.sweepExcept(spark,
         graft.blocks.FixtureSource.cachedFrames)
-      name -> dt
+      name -> (dt, rows)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    // seconds and output row counts of the queries that completed (a
+    // 0-row answer shows as such), and the names of those that threw
+    val times = results.collect { case (k, (dt, Some(_))) => k -> dt }
+    val failed = results.collect { case (k, (_, None)) => k }.toSeq.sorted
+    val qs = times.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val rowsJson = results.collect { case (k, (_, Some(n))) => s"\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
+    val failedJson = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
+    val total = if (times.nonEmpty) times.values.sum else 0.0
     // streaming envelope vs BASELINE.md: backfill blocks/s (reference
     // implies tens/s at concurrency 16) and per-block processing latency
     // (must sit far under the 6 s/block live rate). Measured through the
@@ -227,6 +236,7 @@ object Bench {
       .mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""query_rows":$rowsJson,"failed":$failedJson,""" +
         s""""query_starts":$startsJson,"sf":"$sfDir"$streaming$probeJson}"""
     println(full)
     // The driver snapshots only the TAIL of stdout and json-parses it; the
@@ -244,10 +254,10 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(snapPath),
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    val top = results.toSeq.sortBy(-_._2).take(10)
+    val top = times.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-      s""""n_queries":${results.size},"queries":$top,""" +
+      s""""n_queries":${times.size},"failed":$failedJson,"queries":$top,""" +
       s""""full_queries_file":"$snapPath"$streaming$probeJson}""")
     spark.stop()
   }

@@ -10,11 +10,15 @@ import org.apache.spark.sql.SparkSession
   *     per stage must be a function of DATA SIZE, not of how many cores the
   *     host happens to expose: r14's driver measured the full sf0.1 sweep
   *     FASTER at 8 cores than at 32 purely because every stage's task count
-  *     (and every streaming gate's state-partition count) scaled with the
-  *     core count while the per-task payload stayed kilobytes. The initial
-  *     value is a pre-AQE ceiling only — AQE re-sizes the reduce side by
-  *     bytes (below); production raises the env to O(cluster cores) so the
-  *     ceiling never binds at 100 TB.
+  *     scaled with the core count while the per-task payload stayed
+  *     kilobytes. For batch stages the value is a pre-AQE ceiling only —
+  *     AQE re-sizes the reduce side by bytes (below). Stateful streams get
+  *     no AQE (Spark fixes their state-partition count when the checkpoint
+  *     is created), so `StreamGate.drain` applies the same bytes rule
+  *     itself — clamp(ceil(input bytes / advisoryPartitionSizeInBytes), 1,
+  *     this value) — and streams of unknown input size (`graft.Main`, the
+  *     `blockfeed` drains) take this value as is. Production raises the
+  *     env to O(cluster cores) so the ceiling never binds at 100 TB.
   *   - AQE is left ON (Spark 4 default): runtime skew-join splitting and
   *     partition coalescing are exactly what we want at 100 TB.
   *   - `coalescePartitions.parallelismFirst` stays at Spark's default

@@ -192,18 +192,30 @@ object PqIndex {
     * codebook (dead cells, missing subspaces) indexes exactly like the
     * join did. Same integer terms in a different association — long sums
     * are exact, so the result is bit-identical to join + sum().
+    *
+    * Guards: (sub, code) packs as sub·base + code with base = the largest
+    * cell + 1, so no codebook size can collide two keys; and a LUT whose
+    * length is not the codebook's key count — a missing (sub, code) row
+    * would shift every later position — raises instead of summing the
+    * wrong entries (a null LUT stays null).
     */
   def adcLookupSum(centroids: DataFrame, codes: Column, rdots: Column): Column = {
     val keys = centroids.select(col("sub").cast("int"), col("cell").cast("int"))
       .collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     require(keys.nonEmpty, "adcLookupSum needs a non-empty codebook")
+    require(keys.forall(_._2 >= 0), "adcLookupSum needs non-negative cell ids")
+    val base = keys.map(_._2).max + 1L
     val posOf = keys.zipWithIndex
-      .map { case ((sub, code), i) => (sub * 1024 + code) -> i }.toMap
+      .map { case ((sub, code), i) => (sub * base + code) -> i }.toMap
     val sortedSubs = keys.map(_._1).distinct.sorted
-    sortedSubs.zipWithIndex.map { case (sub, j) =>
+    val sum = sortedSubs.zipWithIndex.map { case (sub, j) =>
       element_at(rdots,
         element_at(typedLit(posOf),
-          lit(sub * 1024) + element_at(codes, lit(j + 1))) + 1)
+          lit(sub * base) + element_at(codes, lit(j + 1))) + 1)
     }.reduce(_ + _)
+    when(size(rdots) === lit(keys.length), sum)
+      .when(rdots.isNotNull, raise_error(lit(
+        s"adcLookupSum: the LUT must hold one entry per codebook (sub, code) " +
+          s"key (${keys.length})")))
   }
 }

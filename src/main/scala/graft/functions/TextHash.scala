@@ -38,19 +38,12 @@ object TextHash {
 
   /** Polynomial rolling hash of a string: fold (acc*31 + codepoint) % Mod.
     * Native codegen'd Catalyst expression ([[PolyHash]]); DuckDB equivalent:
-    * [[sqlPolyHash]]. The built-in-only formulation is kept as
-    * [[polyHashHof]] for the equivalence spec.
+    * [[sqlPolyHash]]. The built-in-only formulation is kept in the test
+    * sources (`HofTwins.polyHashHof`) for the equivalence spec.
     */
   def polyHash(text: Column): Column =
     org.apache.spark.sql.GraftColumn.of(
       PolyHash(org.apache.spark.sql.GraftColumn.expr(text)))
-
-  /** Reference formulation of [[polyHash]] with built-in HOFs only —
-    * interpreted (CodegenFallback), so only used to cross-check the native
-    * expression.
-    */
-  def polyHashHof(text: Column): Column =
-    aggregate(chars(text), lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % Mod)
 
   /** DuckDB SQL rendering of [[polyHash]] over expression `e`. */
   def sqlPolyHash(e: String): String =
@@ -126,26 +119,10 @@ object TextHash {
     */
   def minhashSig(shingleHashes: Column, k: Int): Column =
     // Native codegen'd kernel ([[MinHashSig]]): one k×n loop, one output
-    // allocation. The built-in-only fold is kept as [[minhashSigHof]] for
-    // the equivalence spec.
+    // allocation. The built-in-only fold is kept in the test sources
+    // (`HofTwins.minhashSigHof`) for the equivalence spec.
     org.apache.spark.sql.GraftColumn.of(MinHashSig(
       org.apache.spark.sql.GraftColumn.expr(shingleHashes), k))
-
-  /** Reference formulation of [[minhashSig]] with built-in HOFs only
-    * (interpreted): single pass — fold over the hashes keeping an
-    * element-wise-min accumulator of all k permutations, with
-    * `shingleHashes` in argument position. The loop-over-permutations
-    * formulation (transform(sequence(0, k-1), i =>
-    * array_min(transform(hashes, ...)))) re-evaluates the whole upstream
-    * shingle pipeline k times per row. Empty shingle set → sentinel Mod
-    * (the fold's initial value).
-    */
-  def minhashSigHof(shingleHashes: Column, k: Int): Column =
-    aggregate(
-      shingleHashes,
-      array_repeat(lit(Mod), k),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (m, i) => least(m, ((lit(2) * i + 1) * s + lit(7919L) * (i + 1)) % Mod)))
 
   /** MinHash-UNION sketch AGGREGATE: element-wise min of the group's
     * signatures — exactly the signature of the pooled shingle set (custom
@@ -168,26 +145,10 @@ object TextHash {
     */
   def simhash32(tokenHashes: Column): Column =
     // Native codegen'd kernel ([[SimHash32]]); the built-in-only fold is
-    // kept as [[simhash32Hof]] for the equivalence spec.
+    // kept in the test sources (`HofTwins.simhash32Hof`) for the
+    // equivalence spec.
     org.apache.spark.sql.GraftColumn.of(SimHash32(
       org.apache.spark.sql.GraftColumn.expr(tokenHashes)))
-
-  /** Reference formulation of [[simhash32]] with built-in HOFs only
-    * (interpreted) — cross-checks the native expression.
-    */
-  def simhash32Hof(tokenHashes: Column): Column = {
-    val acc = aggregate(
-      tokenHashes,
-      array_repeat(lit(0L), 32),
-      (a, h) => zip_with(a,
-        transform(sequence(lit(0), lit(31)),
-          j => (h / floor(pow(lit(2), j)).cast("long")).cast("long") % 2 * 2 - 1),
-        (x, y) => x + y))
-    aggregate(
-      zip_with(acc, sequence(lit(0), lit(31)),
-        (s, j) => when(s > 0, floor(pow(lit(2), j)).cast("long")).otherwise(lit(0L))),
-      lit(0L), (a, x) => a + x)
-  }
 
   /** DuckDB SQL for [[simhash32]] over a BIGINT-list expression `hs`. */
   def sqlSimhash32(hs: String): String = {
@@ -212,17 +173,13 @@ object TextHash {
     s"list_transform($e, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
   /** Exact integer dot product of two quantized vectors — native codegen'd
-    * expression ([[DotQ]]); the built-in-only formulation is kept as
-    * [[dotQHof]] for the equivalence spec.
+    * expression ([[DotQ]]); the built-in-only formulation is kept in the
+    * test sources (`HofTwins.dotQHof`) for the equivalence spec.
     */
   def dotQ(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumn.of(DotQ(
       org.apache.spark.sql.GraftColumn.expr(a),
       org.apache.spark.sql.GraftColumn.expr(b)))
-
-  /** Reference formulation of [[dotQ]] with built-in HOFs only (interpreted). */
-  def dotQHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   /** Batched [[dotQ]]: `vec` against every vector of the batch in one
     * codegen'd pass ([[DotQMulti]]) — array of dots, null slots per
@@ -280,17 +237,10 @@ object TextHash {
   def lshBucket(qv: Column, planes: Int): Column =
     // Native codegen'd kernel ([[LshBucketExpr]]): one pass over the vector
     // updating all plane accumulators; the built-in-only formulation is
-    // kept as [[lshBucketHof]] for the equivalence spec.
+    // kept in the test sources (`HofTwins.lshBucketHof`) for the
+    // equivalence spec.
     org.apache.spark.sql.GraftColumn.of(LshBucketExpr(
       org.apache.spark.sql.GraftColumn.expr(qv), planes))
-
-  /** Reference formulation of [[lshBucket]] with built-in HOFs only
-    * (interpreted, one fold per plane) — cross-checks the native kernel.
-    */
-  def lshBucketHof(qv: Column, planes: Int): Column =
-    (0 until planes).map { r =>
-      when(hplaneDot(qv, r) >= 0, lit(1L << r)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   def sqlLshBucket(e: String, planes: Int): String = {
     val bits = (0 until planes).map { r =>

@@ -21,7 +21,8 @@ import graft.{GQuery, QueryPack, Tables}
   * Scale notes: the file source partitions file splits like the batch
   * reader; state is (type, day)-bounded for st1 and entity-bounded for
   * st2 — the same bounded-state arguments as StreamingVolume/StreamingCdc
-  * (SCALE.md "Streaming state discipline").
+  * (SCALE.md "Streaming state discipline"). Each drain sizes its state
+  * partitions from its input bytes ([[statePartitions]]).
   */
 object StreamGate extends QueryPack {
 
@@ -33,16 +34,75 @@ object StreamGate extends QueryPack {
     * production deployment of the same aggregations writes Update-mode
     * deltas to a real sink (Kafka/files) and never collects (see
     * `Main.scala` and the streaming specs' foreachBatch paths).
+    *
+    * `confs` are session settings the stream needs (e.g. its state-store
+    * provider). They, and the [[statePartitions]] count, are set only
+    * around `start()` — the stream clones the session conf when it starts
+    * and records the state-partition count in its checkpoint — and the
+    * session's own values are restored before the drain runs.
     */
   private[queries] def drain(s: SparkSession, df: DataFrame, name: String,
-                    mode: String = "complete"): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+                    mode: String = "complete",
+                    confs: Map[String, String] = Map.empty): DataFrame = {
+    val set = confs ++ statePartitions(s, df)
+      .map(n => "spark.sql.shuffle.partitions" -> n.toString)
+    val prev = set.keys.map(k => k -> s.conf.getOption(k))
+    set.foreach { case (k, v) => s.conf.set(k, v) }
+    val q = try {
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
     try {
       if (!q.awaitTermination(300000))
         sys.error(s"streaming drain $name did not finish in 300s")
     } finally q.stop()
     s.table(name)
+  }
+
+  /** The state-partition count for a stream over `df`: AQE's batch-shuffle
+    * rule, `clamp(ceil(inputBytes / advisoryPartitionSizeInBytes), 1,
+    * spark.sql.shuffle.partitions)`, applied once at start — stateful
+    * streaming cannot get it from AQE, because Spark fixes the count when
+    * the checkpoint is created. None (keep the session's count) when the
+    * input size is unknown: some streaming leaf of the plan is not a file
+    * source (e.g. the `blockfeed` connector).
+    */
+  private[graft] def statePartitions(s: SparkSession, df: DataFrame): Option[Int] =
+    fileSourceBytes(s, df).map { bytes =>
+      val advisory = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val ceiling = s.conf.get("spark.sql.shuffle.partitions").toLong
+      math.max(1L, math.min((bytes + advisory - 1) / advisory, ceiling)).toInt
+    }
+
+  /** Bytes under the paths of the streaming plan's file-source leaves, or
+    * None when it has a streaming leaf of another kind. Static (batch)
+    * leaves do not count: state grows with the stream.
+    */
+  private def fileSourceBytes(s: SparkSession, df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val leaves = org.apache.spark.sql.GraftPlans.logical(df)
+      .collectLeaves().filter(_.isStreaming)
+    val files = leaves.collect {
+      case StreamingRelation(ds, _, _) if classOf[
+          org.apache.spark.sql.execution.datasources.FileFormat]
+          .isAssignableFrom(ds.providingClass) =>
+        (ds.paths ++ ds.options.get("path")).distinct
+    }
+    if (files.size < leaves.size) None
+    else {
+      val hadoop = s.sparkContext.hadoopConfiguration
+      Some(files.flatten.map { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        val fs = path.getFileSystem(hadoop)
+        Option(fs.globStatus(path)).toSeq.flatten
+          .map(st => fs.getContentSummary(st.getPath).getLength).sum
+      }.sum)
+    }
   }
 
   /** st1: dq7's volume-anomaly audit with the counts computed by the LIVE
@@ -206,27 +266,18 @@ object StreamGate extends QueryPack {
                               (String, java.sql.Timestamp)],
                             sink: String,
                             silenceMillis: Long = WatchdogSilence): DataFrame = {
-    val prev = s.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val stallEnc: org.apache.spark.sql.Encoder[graft.streaming.FeedStall] =
-        org.apache.spark.sql.Encoders.product[graft.streaming.FeedStall]
-      val alerts = ev.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-        .transformWithState(new graft.streaming.FeedWatchdog(silenceMillis),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      drain(s, alerts.toDF(), sink, mode = "append")
-        .select(col("source"),
-          expr("unix_millis(last_seen)").as("last_seen_ms"),
-          col("silence_ms"))
-    } finally prev match {
-      case Some(p) => s.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
-    }
+    implicit val stallEnc: org.apache.spark.sql.Encoder[graft.streaming.FeedStall] =
+      org.apache.spark.sql.Encoders.product[graft.streaming.FeedStall]
+    val alerts = ev.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
+      .transformWithState(new graft.streaming.FeedWatchdog(silenceMillis),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+    drain(s, alerts.toDF(), sink, mode = "append",
+      confs = Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      .select(col("source"),
+        expr("unix_millis(last_seen)").as("last_seen_ms"),
+        col("silence_ms"))
   }
 
   private val watchdogOracle = Some("""

@@ -110,4 +110,37 @@ class AssignEquivalenceSpec extends AnyFunSuite {
     val empty = PqIndex.encode(quantized, codebook.limit(0), subDim = 16)
     assert(empty.count() === 0L)
   }
+
+  /** A sparse codebook whose cell ids reach 1024: under a fixed 1024
+    * packing base, (0, 1024) and (1, 0) would share a key.
+    */
+  private def wideCodebook = {
+    import spark.implicits._
+    Seq((0, 0), (0, 1024), (1, 0), (1, 5)).toDF("sub", "cell")
+  }
+
+  test("PqIndex.adcLookupSum: cell ids >= 1024 index their own LUT entries") {
+    import spark.implicits._
+    // LUT positions in (sub, code) order: (0,0) (0,1024) (1,0) (1,5)
+    val rows = Seq((Seq(1024, 5), Seq(10L, 20L, 30L, 40L)),
+        (Seq(0, 0), Seq(10L, 20L, 30L, 40L)))
+      .toDF("codes", "rdots")
+    val got = rows.select(
+      PqIndex.adcLookupSum(wideCodebook, col("codes"), col("rdots")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(got === Seq(20L + 40L, 10L + 30L))
+  }
+
+  test("PqIndex.adcLookupSum: a LUT short of the codebook fails, never shifts") {
+    import spark.implicits._
+    val short = Seq((Seq(1024, 5), Seq(10L, 20L, 30L))).toDF("codes", "rdots")
+    val e = intercept[Exception](short.select(
+      PqIndex.adcLookupSum(wideCodebook, col("codes"), col("rdots"))).collect())
+    assert(e.getMessage.contains("adcLookupSum"))
+    // a null LUT stays null
+    val none = Seq((Seq(1024, 5), Option.empty[Seq[Long]])).toDF("codes", "rdots")
+    assert(none.select(
+      PqIndex.adcLookupSum(wideCodebook, col("codes"), col("rdots")))
+      .head().isNullAt(0))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextHash
+import graft.functions.{HofTwins, TextHash}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -36,7 +36,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val df = texts.toDF("s")
     val bad = df.select(col("s"),
       TextHash.polyHash(col("s")).as("native"),
-      TextHash.polyHashHof(col("s")).as("hof"))
+      HofTwins.polyHashHof(col("s")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
     val scalarOk = df.select(col("s"), TextHash.polyHash(col("s")).as("native"))
@@ -51,7 +51,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val df = arrays.map(_.toSeq).toDF("hs")
     val bad = df.select(
       TextHash.minhashSig(col("hs"), 16).as("native"),
-      TextHash.minhashSigHof(col("hs"), 16).as("hof"))
+      HofTwins.minhashSigHof(col("hs"), 16).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
   }
@@ -62,7 +62,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val df = arrays.toDF("hs")
     val bad = df.select(
       TextHash.simhash32(col("hs")).as("native"),
-      TextHash.simhash32Hof(col("hs")).as("hof"))
+      HofTwins.simhash32Hof(col("hs")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
   }
@@ -75,7 +75,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val df = pairs.toDF("a", "b")
     val bad = df.select(
       TextHash.dotQ(col("a"), col("b")).as("native"),
-      TextHash.dotQHof(col("a"), col("b")).as("hof"))
+      HofTwins.dotQHof(col("a"), col("b")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
     // mismatched lengths -> NULL (the documented DotQ semantics)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextHash
+import graft.functions.{HofTwins, TextHash}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,7 @@ class MinHashSigSpec extends AnyFunSuite {
       .select(col("doc_id"), transform(col("sh"), s => polyHash(s)).as("hs"))
     val bad = hs.select(
       minhashSig(col("hs"), 16).as("native"),
-      minhashSigHof(col("hs"), 16).as("hof"))
+      HofTwins.minhashSigHof(col("hs"), 16).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
   }
@@ -31,7 +31,7 @@ class MinHashSigSpec extends AnyFunSuite {
       .select(transform(tokens(col("text")), t => polyHash(t)).as("hs"))
     val bad = hs.select(
       simhash32(col("hs")).as("native"),
-      simhash32Hof(col("hs")).as("hof"))
+      HofTwins.simhash32Hof(col("hs")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
   }
@@ -45,7 +45,7 @@ class MinHashSigSpec extends AnyFunSuite {
     ).toDF("id", "hs")
     val out = df.select(col("id"),
         TextHash.simhash32(col("hs")).as("native"),
-        TextHash.simhash32Hof(col("hs")).as("hof"))
+        HofTwins.simhash32Hof(col("hs")).as("hof"))
       .orderBy("id").collect()
     assert(out(0).getLong(1) === 0L && out(0).getLong(2) === 0L)
     assert(out(1).getLong(1) === 0L && out(1).getLong(2) === 0L)
@@ -58,7 +58,7 @@ class MinHashSigSpec extends AnyFunSuite {
       .select(quantize(col("embedding")).as("qv"))
     val bad = q.select(
       lshBucket(col("qv"), 8).as("native"),
-      lshBucketHof(col("qv"), 8).as("hof"))
+      HofTwins.lshBucketHof(col("qv"), 8).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() === 0)
   }
@@ -72,7 +72,7 @@ class MinHashSigSpec extends AnyFunSuite {
     ).toDF("id", "qv")
     val out = df.select(col("id"),
         TextHash.lshBucket(col("qv"), 8).as("native"),
-        TextHash.lshBucketHof(col("qv"), 8).as("hof"))
+        HofTwins.lshBucketHof(col("qv"), 8).as("hof"))
       .orderBy("id").collect()
     assert(out(0).getLong(1) === 0L && out(0).getLong(2) === 0L)
     assert(out(1).getLong(1) === 0L && out(1).getLong(2) === 0L)
@@ -91,7 +91,7 @@ class MinHashSigSpec extends AnyFunSuite {
     ).toDF("id", "hs")
     val out = df.select(col("id"),
         TextHash.minhashSig(col("hs"), 4).as("native"),
-        TextHash.minhashSigHof(col("hs"), 4).as("hof"))
+        HofTwins.minhashSigHof(col("hs"), 4).as("hof"))
       .orderBy("id").collect()
     assert(out(0).getSeq[Long](1) === Seq.fill(4)(TextHash.Mod))
     assert(out(0).getSeq[Long](1) === out(0).getSeq[Long](2))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{PolyHash, TextHash}
+import graft.functions.{HofTwins, PolyHash, TextHash}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +20,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val bad = docs.select(
       TextHash.polyHash(col("text")).as("native"),
-      TextHash.polyHashHof(col("text")).as("hof"))
+      HofTwins.polyHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() == 0)
   }
@@ -49,7 +49,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(TextHash.quantize(col("embedding")).as("qv"))
     val bad = q.select(
       TextHash.dotQ(col("qv"), col("qv")).as("native"),
-      TextHash.dotQHof(col("qv"), col("qv")).as("hof"))
+      HofTwins.dotQHof(col("qv"), col("qv")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(bad.count() == 0)
     // empty arrays → 0; length mismatch → null (zip_with padding semantics)
@@ -58,6 +58,6 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
                 CAST(array(1, 2) AS ARRAY<BIGINT>) AS b""")
     assert(edges.select(TextHash.dotQ(col("a"), col("a"))).head().getLong(0) == 0L)
     assert(edges.select(TextHash.dotQ(col("a"), col("b"))).head().isNullAt(0))
-    assert(edges.select(TextHash.dotQHof(col("a"), col("b"))).head().isNullAt(0))
+    assert(edges.select(HofTwins.dotQHof(col("a"), col("b"))).head().isNullAt(0))
   }
 }

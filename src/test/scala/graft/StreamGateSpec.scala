@@ -266,4 +266,70 @@ class StreamGateSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a single-batch (final-state) audit must NOT see the healed stall")
   }
 
+  /** Drains `q` (a gate query) in `s` and returns its result together with
+    * the state-partition count of every progress its `sink` stream reported.
+    */
+  private def drainWithPartitions(s: SparkSession, q: GQuery,
+                                  sink: String): (DataFrame, Seq[Int]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == sink)
+          e.progress.stateOperators.foreach(o => parts.add(o.numShufflePartitions.toInt))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    }
+    s.streams.addListener(l)
+    try {
+      val out = q.run(s, dir)
+      // listener events arrive asynchronously; termination comes last
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "no termination event")
+      import scala.jdk.CollectionConverters._
+      (out, parts.asScala.toSeq)
+    } finally s.streams.removeListener(l)
+  }
+
+  private def hllRows(df: DataFrame): Set[String] =
+    df.collect().map(_.mkString("|")).toSet
+
+  test("st3 drain sizes its state partitions by input bytes, then restores the session") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(before === Session.shufflePartitions)
+    val (out, parts) = drainWithPartitions(spark,
+      queries.StreamGate.hllSnapshots, "st3_snaps")
+    assert(parts.nonEmpty && parts.forall(_ == 1),
+      s"a 27 KB events table needs one state partition, got $parts")
+    assert(hllRows(out).nonEmpty)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
+      "the drain must restore the session's shuffle partitions")
+
+    val s = spark.newSession()
+    // unknown input size (no file-source leaf) keeps the session default
+    assert(queries.StreamGate.statePartitions(s,
+      s.readStream.format("rate").load()) === None)
+    // the session's shuffle partitions stay the ceiling
+    val ev = Tables.loadStream(s, dir, "events")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    assert(queries.StreamGate.statePartitions(s, ev) ===
+      Some(s.conf.get("spark.sql.shuffle.partitions").toInt))
+  }
+
+  test("st3 answer is independent of the state-partition count") {
+    val one = drainWithPartitions(spark.newSession(),
+      queries.StreamGate.hllSnapshots, "st3_snaps")
+    val s = spark.newSession()
+    // sf0.001's events file is ~27 KB: an 8 KB advisory size gives k = 4
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
+    val many = drainWithPartitions(s, queries.StreamGate.hllSnapshots,
+      "st3_snaps")
+    assert(one._2.forall(_ == 1))
+    assert(many._2.nonEmpty && many._2.forall(_ > 1),
+      s"expected k > 1 state partitions, got ${many._2}")
+    assert(hllRows(many._1) === hllRows(one._1))
+  }
+
 }
