@@ -37,6 +37,18 @@ import org.apache.spark.sql.SparkSession
   *     for kilobyte iterations. With it, cached relations coalesce by bytes
   *     like everything else (results are partitioning-independent; the
   *     oracle re-verified 223/223 under the flip).
+  *   - The `file:` scheme (checkpoints, local parquet output, state
+  *     stores) runs on [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]].
+  *     Without Hadoop's native library, stock `RawLocalFileSystem` forks a
+  *     `chmod` for every file and directory it creates and a `readlink` for
+  *     every link-status check, so each streaming offset, commit and state
+  *     file cost 30–45 ms of forked processes — about half of every live
+  *     trigger. The replacement is the same Hadoop classes (checksummed
+  *     FileSystem, `ChecksumFs` over `DelegateToFileSystem` for FileContext,
+  *     the same atomic rename contract) with only those two calls made
+  *     in the JVM through NIO's POSIX attributes, so on a POSIX host it
+  *     behaves as stock does (`LocalFsSpec` pins the parity); other
+  *     schemes (HDFS, S3) keep their own implementations.
   *   - `nanosAsLong`: the synthetic `events` table carries parquet
   *     TIMESTAMP(NANOS), which Spark cannot represent natively; we read it as
   *     Long and convert to micros in [[Tables.load]].
@@ -80,6 +92,10 @@ object Session {
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      // `file:` only (HDFS, S3 untouched): see the scale note above
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
 
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
