@@ -99,7 +99,7 @@ object Bench {
       try {
         import org.apache.spark.sql.streaming.Trigger
         val t = graft.blocks.FixtureSource.DefaultTemplates
-        // a drain that does not finish must DROP the whole streaming
+        // a drain that does not finish must FAIL the whole streaming
         // envelope (the outer catch), not record 100/300s as a throughput —
         // and must not leave a query running when a stub is stopped
         def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery,
@@ -181,7 +181,13 @@ object Bench {
           s""""http_per_block_latency_sec":$httpPerBlock,""" +
           s""""grpc_backfill_blocks_per_sec":$grpcBackfill,""" +
           s""""baseline_backfill_blocks_per_sec":30,"baseline_block_interval_sec":6}"""
-      } catch { case _: Throwable => "" }
+      } catch {
+        // a failed envelope is reported, never silently dropped
+        case e: Throwable =>
+          System.err.println("[bench] streaming envelope failed:")
+          e.printStackTrace()
+          ""","streaming_failed":true"""
+      }
     }
     val (spinAfter, shufAfter, latAfter) =
       if (probeOn) probe() else (-1.0, -1.0, -1.0)

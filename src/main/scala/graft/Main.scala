@@ -15,8 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
   *     out=/tmp/blocks [checkpoint=/tmp/ckpt] [skipEmpty=true]
   *     [txEvents=a,b] [blockEvents=c] [nth=10] [ordered=true]
   *     [maxHeightsPerTrigger=10000] [trigger=availableNow|<interval>]
-  *     [stateStore=rocksdb] [sink=blockfiles] [ws=ws://node/websocket]
-  *     [watchdog=<seconds>]
+  *     [stateStore=rocksdb] [ws=ws://node/websocket] [watchdog=<seconds>]
   * }}}
   *
   * `watchdog=N` (requires `stateStore=rocksdb`) attaches a SECOND
@@ -33,8 +32,9 @@ import org.apache.spark.sql.streaming.Trigger
   * DSv2 path never pushes, so here it is an ordinary post-scan filter);
   * event filters are the P2/P3
   * `exists` predicates; the file sink is the K2 sha-splayed idempotent
-  * layout (ordered = W6); `nth` adds the K3 console sample as a second
-  * sink off the same batch (K8 fan-out).
+  * layout written by the `blockfiles` writer (ordered = W6); `nth` adds
+  * the K3 console sample as a second sink off the same batch (K8 fan-out).
+  * Whichever sinks a run selects, they share one `foreachBatch` query.
   *
   * `events=tx|block` switches to the `EventsMain.kt` entry point
   * (§3, `es-cli/EventsMain.kt`): instead of raw blocks, each micro-batch
@@ -86,39 +86,21 @@ object Main {
         ev.write.mode("overwrite").parquet(s"$out/batch=$id")
       }
     }
-    val sinks = Seq(
-      eventSink.orElse(
-        Some(BlockSinks.fileSink(out, opts.get("ordered").exists(_.toBoolean)))),
-      opts.get("nth").map { n => (b: org.apache.spark.sql.DataFrame, id: Long) =>
+    val sinks =
+      eventSink.getOrElse(
+        BlockSinks.fileSink(out, opts.get("ordered").exists(_.toBoolean))) +:
+      opts.get("nth").map { n => (b: org.apache.spark.sql.DataFrame, _: Long) =>
         BlockSinks.consoleSample(b, n.toInt)
           .select("height", "chain_id", "num_txs", "historical").show(false)
-      }).flatten
+      }.toSeq
 
     val trigger = opts.get("trigger") match {
       case None | Some("availableNow") => Trigger.AvailableNow()
       case Some(interval) => Trigger.ProcessingTime(interval)
     }
-    // sink=blockfiles routes through the DSv2 writer (atomic-move task
-    // commits) instead of foreachBatch — the single-sink production path;
-    // foreachBatch remains the K8 multi-sink / events-mode fan-out.
-    // The DSv2 path cannot host the events=/nth= fan-outs, so that
-    // combination is a conflict, not a silent fallback.
-    if (opts.get("sink").contains("blockfiles") &&
-        (eventSink.nonEmpty || opts.get("nth").nonEmpty))
-      sys.error("sink=blockfiles cannot be combined with events=/nth= " +
-        "(those run through the foreachBatch multi-sink); drop sink= or " +
-        "the fan-out options")
-    var writer =
-      if (opts.get("sink").contains("blockfiles") &&
-          eventSink.isEmpty && opts.get("nth").isEmpty)
-        BlockSinks.fileFrames(filtered)
-          .select(org.apache.spark.sql.functions.col("height"),
-            org.apache.spark.sql.functions.col("json"))
-          .writeStream.format("blockfiles").option("path", out)
-          .trigger(trigger)
-      else filtered.writeStream
-        .foreachBatch(BlockSinks.multiSink(sinks))
-        .trigger(trigger)
+    var writer = filtered.writeStream
+      .foreachBatch(BlockSinks.multiSink(sinks))
+      .trigger(trigger)
     opts.get("checkpoint").foreach(c => writer = writer.option("checkpointLocation", c))
     if (opts.contains("watchdog") && !opts.get("stateStore").contains("rocksdb"))
       sys.error("watchdog= requires stateStore=rocksdb " +

@@ -21,15 +21,11 @@ import org.apache.spark.sql.SparkSession
   *     env to O(cluster cores) so the ceiling never binds at 100 TB.
   *   - AQE is left ON (Spark 4 default): runtime skew-join splitting and
   *     partition coalescing are exactly what we want at 100 TB.
-  *   - `coalescePartitions.parallelismFirst` stays at Spark's default
+  *   - `coalescePartitions.parallelismFirst` is left at Spark's default
   *     (true): an r15 ABAB subset A/B measured `false` (coalesce toward the
   *     64 MB advisory size) over-serializing the compute-bound small
   *     shuffles of the graph pack (g4 4.6 → 5.9 s, its ~10 s of real join
-  *     work squeezed onto one post-coalesce partition), while the default's
-  *     1 MB floor already coalesces the kilobyte shuffles to one task and
-  *     gives the 1–20 MB ones byte-proportional parallelism. At 100 TB
-  *     partitions are far above the floor either way; the env hook below
-  *     lets a cluster profile re-measure the flip without a rebuild.
+  *     work squeezed onto one post-coalesce partition).
   *   - `canChangeCachedPlanOutputPartitioning=true`: the iterative packs
   *     (graph, dd) persist hash-partitioned relations; without this flag a
   *     cached plan keeps its pre-AQE partition count (= the shuffle ceiling,
@@ -76,10 +72,8 @@ object Session {
       .withExtensions(graft.functions.GraftFunctions.extension)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // env hooks exist so a controlled A/B can flip either knob ("false"/
-      // "false" restores the measured-and-rejected variants) without a rebuild
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+      // the env hook lets a controlled A/B flip the knob ("false" restores
+      // the measured-and-rejected variant) without a rebuild
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
       .config("spark.sql.session.timeZone", "UTC")

@@ -17,27 +17,29 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    // events.ts has shipped under two parquet encodings across testdata
-    // generations, so branch on what the scan actually produced rather than
-    // assuming one:
-    //   - TIMESTAMP(NANOS): Spark can't represent nanos; with nanosAsLong=true
-    //     (set in Session) it reads as Long, which we truncate to micros.
-    //     `div` is integral — double division loses precision above 2^53 ns.
-    //   - timestamp[us] without tz metadata: reads as TIMESTAMP_NTZ; cast to
-    //     session-local TimestampType (session tz is pinned UTC, so the
-    //     wall-clock values are unchanged and unix_micros/window math holds).
-    if (name == "events") {
-      import org.apache.spark.sql.functions.{col, expr}
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      df.schema("ts").dataType match {
-        case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-        case TimestampType    => df
-        case other => sys.error(
-          s"events.ts read as unexpected type $other — testdata parquet encoding " +
-            "changed again; add a branch in Tables.load")
-      }
-    } else df
+    if (name == "events") eventsTs(df) else df
+  }
+
+  // events.ts has shipped under two parquet encodings across testdata
+  // generations, so branch on what the scan actually produced rather than
+  // assuming one:
+  //   - TIMESTAMP(NANOS): Spark can't represent nanos; with nanosAsLong=true
+  //     (set in Session) it reads as Long, which we truncate to micros.
+  //     `div` is integral — double division loses precision above 2^53 ns.
+  //   - timestamp[us] without tz metadata: reads as TIMESTAMP_NTZ; cast to
+  //     session-local TimestampType (session tz is pinned UTC, so the
+  //     wall-clock values are unchanged and unix_micros/window math holds).
+  private def eventsTs(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    df.schema("ts").dataType match {
+      case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampType    => df
+      case other => sys.error(
+        s"events.ts read as unexpected type $other — testdata parquet encoding " +
+          "changed again; add a branch in Tables.eventsTs")
+    }
   }
 
   /** Register all tables as temp views named after themselves, so queries can
@@ -50,8 +52,8 @@ object Tables {
     * path) — what the st-family gate queries read so real `readStream`
     * machinery, not a batch scan, sits under the DuckDB oracle. The schema
     * comes from a batch probe (file streaming sources require one
-    * up-front), and `events.ts` gets the identical encoding-branch
-    * treatment as [[load]] so batch and stream see one engine-facing type.
+    * up-front), and `events.ts` goes through the same encoding branch as
+    * [[load]] so batch and stream see one engine-facing type.
     */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -62,17 +64,6 @@ object Tables {
     // silently ingest any sibling whose name merely starts with it
     // (events.parquet_bak, …) and double every count downstream
     val df = spark.readStream.schema(schema).parquet(s"$dir/{$name.parquet}")
-    if (name == "events") {
-      import org.apache.spark.sql.functions.{col, expr}
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      df.schema("ts").dataType match {
-        case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-        case TimestampType    => df
-        case other => sys.error(
-          s"events.ts read as unexpected type $other — testdata parquet encoding " +
-            "changed again; add a branch in Tables.loadStream")
-      }
-    } else df
+    if (name == "events") eventsTs(df) else df
   }
 }

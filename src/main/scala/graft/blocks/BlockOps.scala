@@ -118,16 +118,19 @@ object BlockOps {
 
   /** F13: protobuf `cosmos.tx.v1beta1.Tx` decode — fee amount/denom + memo
     * from the raw base64 tx ([[ProtoMini]]; reference
-    * `models/Extensions.kt:37–50`). Returns a null struct for null/undecodable
-    * input (reference nulls the TxData).
+    * `models/Extensions.kt:37–50`). `None` for null/undecodable input
+    * (reference nulls the TxData). The one decode policy behind both the
+    * per-tx [[txMetaUdf]] and the sinks' per-block array UDF.
     */
+  def decodeTxMeta(b64: String): Option[ProtoMini.TxMeta] =
+    if (b64 == null) None
+    else
+      try ProtoMini.txMeta(java.util.Base64.getDecoder.decode(b64))
+      catch { case _: Exception => None }
+
+  /** F13 per tx: [[decodeTxMeta]] as a UDF (null struct on `None`). */
   val txMetaUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (b64: String) =>
-      if (b64 == null) None
-      else
-        try ProtoMini.txMeta(java.util.Base64.getDecoder.decode(b64))
-        catch { case _: Exception => None }
-    }
+    udf((b64: String) => decodeTxMeta(b64))
 
   // === misc (F14–F15) ================================================
 

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import java.util
 
@@ -17,16 +17,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (`FileOutput.kt:16–40`): one JSON file per block at
   * `<splay>/<height padded 10>.json`, splay = first 4 hex chars of
   * UPPER(sha256(height)). The read side is the `blockfeed` connector; this
-  * completes the connector story with a real writer commit protocol instead
-  * of a `foreachBatch` lambda:
+  * is the engine's only K2 file writer — [[BlockSinks.fileSink]] and
+  * [[BlockSinks.kafkaFileSink]] batch-write through it:
   *
   *   - executors write each file to a task-attempt-unique temp name and
-  *     ATOMIC_MOVE it to the deterministic final path — a torn write can
-  *     never surface under the final name;
+  *     hard-link it to the deterministic final path — a torn write can
+  *     never surface under the final name (not ATOMIC_MOVE: on POSIX that
+  *     silently replaces an existing target);
   *   - final paths are pure functions of the height and content is
   *     deterministic, so task retries, speculative duplicates and replayed
-  *     epochs re-commit the SAME bytes (move loses to an existing file →
-  *     skip): exactly-once output from at-least-once execution, the same
+  *     epochs re-commit the SAME bytes (the link loses to an existing file
+  *     → skip): exactly-once output from at-least-once execution, the same
   *     idempotence argument as the reference's skip-if-exists;
   *   - `abort` removes the attempt's temp files; nothing partial escapes.
   *
@@ -84,8 +85,8 @@ case class BlockFilesCommit(written: Long, skipped: Long) extends WriterCommitMe
 class BlockFilesBatchWrite(dir: String, hIdx: Int, jIdx: Int) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new BlockFilesWriterFactory(dir, hIdx, jIdx)
-  // files were atomically finalized task-side with deterministic names and
-  // content — the job commit has nothing left to move
+  // files were atomically linked into place task-side with deterministic
+  // names and content — the job commit has nothing left to move
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }

@@ -14,11 +14,12 @@ import org.apache.spark.sql.types.StructType
   *     event lists are all built with array HOFs inside one projection —
   *     one pass over the raw rows, no groupBy, no join. At 100 TB the sink
   *     stage adds no exchange to the plan.
-  *   - writers are `foreachBatch` functions; exactly-once comes from the
-  *     offset log plus idempotent file naming (reference `FileOutput.kt:32`
-  *     skips existing files; we do the same).
-  *   - multiple sinks fan out from one batch DataFrame (K8, `Main.kt:104`)
-  *     after a `persist()` so the upstream plan runs once.
+  *   - sinks are `foreachBatch` functions; every K2 file is written by the
+  *     `blockfiles` DSv2 writer ([[BlockFilesWriter]]: temp file hard-linked
+  *     into place, existing files skipped like `FileOutput.kt:32`), so
+  *     exactly-once comes from the offset log plus idempotent file naming.
+  *   - sinks fan out from one batch DataFrame (K8, `Main.kt:104`) after a
+  *     `persist()` so the upstream plan runs once.
   */
 object BlockSinks {
 
@@ -39,12 +40,7 @@ object BlockSinks {
   private[sinks] val txMetasUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (txs: Seq[String]) =>
       if (txs == null) Seq.empty[Option[ProtoMini.TxMeta]]
-      else txs.map { b64 =>
-        if (b64 == null) None
-        else
-          try ProtoMini.txMeta(java.util.Base64.getDecoder.decode(b64))
-          catch { case _: Exception => None }
-      }
+      else txs.map(BlockOps.decodeTxMeta)
     }
 
   /** E6: one nested `StreamBlock` row per height, assembled shuffle-free.
@@ -121,19 +117,12 @@ object BlockSinks {
       filePath(col("height")).as("rel_path"),
       to_json(struct(col("*"))).as("json"))
 
-  /** K2 writer body: idempotent one-file-per-block (skip existing, like
-    * `FileOutput.kt:32`) — distributed, executed per partition.
+  /** K2 writer body: append (height, json) frames through the `blockfiles`
+    * writer, one file per block, existing files skipped.
     */
-  def writeFileBatch(frames: DataFrame, dir: String): Unit =
-    frames.select("rel_path", "json").foreachPartition {
-      (rows: Iterator[Row]) =>
-        rows.foreach { r =>
-          val p = java.nio.file.Paths.get(dir, r.getString(0))
-          java.nio.file.Files.createDirectories(p.getParent)
-          if (!java.nio.file.Files.exists(p))
-            java.nio.file.Files.write(p, r.getString(1).getBytes("UTF-8"))
-        }
-    }
+  private def writeFiles(frames: DataFrame, dir: String): Unit =
+    frames.select("height", "json")
+      .write.format("blockfiles").option("path", dir).mode("append").save()
 
   /** K2 as a `foreachBatch` function.
     *
@@ -146,7 +135,7 @@ object BlockSinks {
   def fileSink(dir: String, ordered: Boolean = false): (DataFrame, Long) => Unit =
     (batch, _) => {
       val frames = fileFrames(batch)
-      writeFileBatch(
+      writeFiles(
         if (ordered) frames.orderBy(col("height")).coalesce(1) else frames,
         dir)
     }
@@ -176,12 +165,7 @@ object BlockSinks {
   def kafkaFileSink(dir: String, spark: SparkSession): (DataFrame, Long) => Unit =
     (frames, _) => {
       val sb = decodeKafkaFrames(frames, spark)
-      writeFileBatch(
-        sb.select(
-          col("height"),
-          filePath(col("height")).as("rel_path"),
-          to_json(struct(col("*"))).as("json")),
-        dir)
+      writeFiles(sb.select(col("height"), to_json(struct(col("*"))).as("json")), dir)
     }
 
   /** K3: console sampling — every `nth` block (`ConsoleObserver.kt:41`). */
@@ -189,7 +173,9 @@ object BlockSinks {
     raw.filter(col("height") % nth === 0)
 
   /** K8: fan one batch out to several sinks; persist so the upstream plan
-    * (explodes + proto decode) executes once, not once per sink.
+    * (explodes + proto decode) executes once, not once per sink — nor twice
+    * for ordered mode alone, whose range sort samples the batch in a job of
+    * its own before the write.
     */
   def multiSink(sinks: Seq[(DataFrame, Long) => Unit]): (DataFrame, Long) => Unit =
     (batch, id) => {

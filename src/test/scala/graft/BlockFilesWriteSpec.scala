@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The `blockfiles` DSv2 writer: same file set and bytes as the
-  * foreachBatch K2 sink, idempotent under rewrite (the task-retry /
-  * speculative-execution / epoch-replay safety argument), and exactly-once
-  * through `writeStream` with a checkpointed restart.
+/** The `blockfiles` DSv2 writer: one file per block at
+  * `BlockFilesWriter.relPath(height)` holding that height's `fileFrames`
+  * json, idempotent under rewrite (the task-retry / speculative-execution /
+  * epoch-replay safety argument), and exactly-once through `writeStream`
+  * with a checkpointed restart.
   */
 class BlockFilesWriteSpec extends AnyFunSuite {
 
@@ -28,23 +29,16 @@ class BlockFilesWriteSpec extends AnyFunSuite {
         new String(Files.readAllBytes(p), "UTF-8"))
       .toMap
 
-  test("batch write: same file set and bytes as the foreachBatch K2 sink") {
-    val viaDsv2 = Files.createTempDirectory("bfw_dsv2").toString
-    val viaLambda = Files.createTempDirectory("bfw_lambda").toString
+  test("batch write: the file set and bytes of fileFrames' relPath(h) → json") {
+    val dir = Files.createTempDirectory("bfw_dsv2").toString
     frames.select(col("height"), col("json"))
-      .write.format("blockfiles").option("path", viaDsv2).mode("append").save()
-    BlockSinks.writeFileBatch(frames, viaLambda)
-    val a = listFiles(viaDsv2)
-    val b = listFiles(viaLambda)
-    assert(a.keySet === b.keySet)
-    assert(a.size === 100)
-    assert(a.forall { case (k, v) => b(k) == v })
-    // the splay layout matches the scala twin
-    a.keySet.foreach { rel =>
-      val h = rel.split("/")(1).stripSuffix(".json").toLong
-      assert(rel === BlockFilesWriter.relPath(h).replace('/',
-        java.io.File.separatorChar).replace(java.io.File.separatorChar, '/'))
-    }
+      .write.format("blockfiles").option("path", dir).mode("append").save()
+    val rows = frames.select("height", "rel_path", "json").collect()
+    // the splay column matches the scala twin
+    assert(rows.forall(r => r.getString(1) == BlockFilesWriter.relPath(r.getLong(0))))
+    val expect = rows.map(r => BlockFilesWriter.relPath(r.getLong(0)) -> r.getString(2)).toMap
+    assert(expect.size === 100)
+    assert(listFiles(dir) === expect)
   }
 
   test("rewrite is idempotent: same files, no temp residue") {

@@ -31,8 +31,7 @@ class BlockSinksSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("K2 writer: one file per block, idempotent on rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("k2sink").toString
-    val frames = BlockSinks.fileFrames(raw).persist()
-    BlockSinks.writeFileBatch(frames, dir)
+    BlockSinks.fileSink(dir)(raw, 0L)
     def listFiles() = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
@@ -42,8 +41,7 @@ class BlockSinksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files.size == 100) // 100 historical fixture blocks in range
     val probe = files.head
     val before = java.nio.file.Files.getLastModifiedTime(probe)
-    BlockSinks.writeFileBatch(frames, dir) // rerun: must skip existing
-    frames.unpersist()
+    BlockSinks.fileSink(dir)(raw, 1L) // rerun: must skip existing
     assert(listFiles().size == 100)
     assert(java.nio.file.Files.getLastModifiedTime(probe) == before)
     // content is valid JSON carrying the height
@@ -68,7 +66,7 @@ class BlockSinksSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("k8sink").toString
     val seen = new java.util.concurrent.atomic.AtomicLong
     val sink = BlockSinks.multiSink(Seq(
-      (b, _) => BlockSinks.writeFileBatch(BlockSinks.fileFrames(b), dir),
+      BlockSinks.fileSink(dir),
       (b, _) => seen.set(b.count())))
     sink(raw, 0L)
     import scala.jdk.CollectionConverters._

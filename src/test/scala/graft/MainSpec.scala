@@ -28,6 +28,10 @@ class MainSpec extends AnyFunSuite {
     assert(after.size === 106)
     assert(after.forall(f =>
       java.nio.file.Files.getLastModifiedTime(f) == stamps(f.toString)))
+    // the blockfiles writer's temp files never outlive a write
+    val stray = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+      .iterator().asScala.filter(_.toString.contains(".tmp-")).toSeq
+    assert(stray.isEmpty, s"temp files leaked: $stray")
   }
 
   test("CLI watchdog: the stalled-chain alarm runs alongside the stream " +
@@ -52,20 +56,6 @@ class MainSpec extends AnyFunSuite {
         "trigger=availableNow", "watchdog=30"))
     }
     assert(e.getMessage.contains("rocksdb"))
-  }
-
-  test("CLI sink=blockfiles: the DSv2 writer path lands the same 106 files") {
-    val out = java.nio.file.Files.createTempDirectory("cli_dsv2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cli_dsv2_ckpt").toString
-    Main.main(Array(
-      "from=2270370", s"out=$out", s"checkpoint=$ckpt",
-      "sink=blockfiles", "maxHeightsPerTrigger=40", "trigger=availableNow"))
-    import scala.jdk.CollectionConverters._
-    val files =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
-        .filter(_.toString.endsWith(".json")).toSeq
-    assert(files.size === 106)
-    assert(files.forall(!_.toString.contains(".tmp-")))
   }
 
   test("CLI events mode: flattened tx-event parquet per batch (EventsMain)") {
