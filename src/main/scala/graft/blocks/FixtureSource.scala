@@ -18,11 +18,29 @@ import org.apache.spark.sql.functions._
   * rows come out of here and out of the blockfeed DSv2 connector, so the ops
   * layer is transport-agnostic. Fixture files are pretty-printed → multiLine
   * JSON reads (one record per file).
+  *
+  * Two corpora share this layout. [[ReferenceTemplates]] is the reference's
+  * golden corpus, a frozen slice of the real chain; it lives outside the
+  * repository. [[CommittedChain]] is a golden-shaped synthetic chain that
+  * the repository holds (written by `tools/fixture_chain.py`, FIXTURES.md
+  * §A "The committed chain"): same heights, pages and control frames, its
+  * own values, listed in its `manifest.json`. [[DefaultTemplates]], which
+  * the block queries, the CLI and the specs read, is the golden corpus
+  * where that directory exists and the committed chain where it does not.
   */
 object FixtureSource {
 
-  val DefaultTemplates =
+  val ReferenceTemplates =
     "/root/reference/es-core/src/testFixtures/resources/templates"
+
+  /** The committed chain, relative to the repository root. */
+  val CommittedChain = "fixtures/chain"
+
+  /** The golden corpus if present, else the committed chain — absolute, so
+    * the DuckDB oracle SQL that embeds it resolves from any directory. */
+  val DefaultTemplates: String =
+    if (new java.io.File(ReferenceTemplates).isDirectory) ReferenceTemplates
+    else new java.io.File(CommittedChain).getAbsolutePath
 
   /** `${var:-default}` template substitution (the reference's
     * StringSubstitutor defaults, `testFixtures/.../utils/Templates.kt:27`).

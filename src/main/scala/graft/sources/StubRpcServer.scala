@@ -80,7 +80,8 @@ final class StubRpcServer(dir: String,
     * and carries its height) but loses its `num_txs` key — the
     * missing-count shape the codec must SKIP rather than trust as 0. Text
     * surgery on the served body (never the memoized template): find the
-    * entry via its unique header `"height": "h"`, then break the NEXT
+    * entry via its unique header `"height": "h"` (any whitespace around the
+    * colon, so a compact page is corrupted too), then break the NEXT
     * `num_txs` key after it (template order is block_id/size/header/
     * num_txs, so the next key is this entry's own). Budget is consumed
     * only when the page actually carries the height.
@@ -89,7 +90,7 @@ final class StubRpcServer(dir: String,
     val armedNow = corruptMetaArmed
     if (armedNow.isEmpty) body
     else armedNow.foldLeft(body) { (b, h) =>
-      val at = b.indexOf(s""""height": "$h"""")
+      val at = s""""height"\\s*:\\s*"$h"""".r.findFirstMatchIn(b).fold(-1)(_.start)
       if (at < 0) b
       else {
         val key = b.indexOf("\"num_txs\"", at)

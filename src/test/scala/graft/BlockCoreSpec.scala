@@ -6,13 +6,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Parity tests against the reference's golden fixtures. Ground truth
-  * (reference `testFixtures/.../utils/Constants.kt:12–36` + an independent
-  * Python scan of the template JSON):
+/** Parity tests against the fixture corpus (FIXTURES.md §A). Ground truth
+  * on the reference's golden templates (reference
+  * `testFixtures/.../utils/Constants.kt:12–36` + an independent Python scan
+  * of the template JSON):
   *   - historical heights 2270370..2270469 → 100 blocks, 29 non-empty
   *   - live heights 3126935..3126940 → 6 blocks; combined = 106
   *   - 9838 tx events, 2211 begin-block events, 0 tx errors
   *   - first tx of 2270408: sha256 B2FB…0E21, fee 11786678865 nhash, memo ""
+  * The height and count facts are the corpus layout, shared with the
+  * committed chain; the values are read from [[Fixture]].
   */
 class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -37,28 +40,28 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val minMax = b.agg(min("height"), max("height")).head()
     assert(minMax.getLong(0) === From && minMax.getLong(1) === To)
     assert(b.filter(col("is_empty") =!= (col("num_txs") === 0)).count() === 0L)
-    assert(b.filter(col("chain_id") === "pio-testnet-1").count() === 100L)
+    assert(b.filter(col("chain_id") === Fixture.chainId).count() === 100L)
     assert(b.filter(col("time").isNull).count() === 0L)
   }
 
   test("tx_events: 9838 rows with positional hash + proto fee (E1/E5/F13)") {
     val te = EventTables.txEvents(raw).cache()
-    assert(te.count() === 9838L)
+    assert(te.count() === Fixture.txEventRows)
     // every event row is anchored to a non-empty block and carries a tx hash
     assert(te.filter(length(col("tx_hash")) =!= 64).count() === 0L)
     // spot-check the independently computed ground truth for 2270408 tx 0
     val r = te.filter(col("block_height") === 2270408L && col("tx_index") === 0)
       .select("tx_hash", "fee", "denom", "note").distinct().head()
-    assert(r.getString(0) === "B2FB7800D823CF72AF3C6EAFF21ED61ED2D1709489F089EFB88D5A15F4E60E21")
-    assert(r.getDecimal(1).toBigInteger.toString === "11786678865")
-    assert(r.getString(2) === "nhash")
-    assert(r.getString(3) === "")
+    assert(r.getString(0) === Fixture.BigTx.hash)
+    assert(r.getDecimal(1).toBigInteger.toString === Fixture.BigTx.fee)
+    assert(r.getString(2) === Fixture.BigTx.denom)
+    assert(r.getString(3) === Fixture.BigTx.memo)
     te.unpersist()
   }
 
   test("block_events: 2211 rows incl. empty blocks (E2)") {
     val be = EventTables.blockEvents(raw)
-    assert(be.count() === 2211L)
+    assert(be.count() === Fixture.blockEventRows)
     // empty blocks still emit begin-block events
     val emptyHeights = EventTables.blocks(raw).filter(col("is_empty")).select("height")
     assert(be.join(emptyHeights, be("block_height") === emptyHeights("height")).count() > 0L)
@@ -73,13 +76,13 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val row = raw.filter(col("height") === 2270465L)
       .select(expr("transform(end_block_events, e -> e.type)").as("types"))
       .head()
-    assert(row.getSeq[String](0) === Seq("transfer", "message"))
+    assert(row.getSeq[String](0) === Fixture.endBlockEventTypes)
     // all other heights in the range carry a null column, as on the wire
     assert(raw.filter(col("end_block_events").isNotNull).count() === 1L)
   }
 
   test("tx_errors: none in fixtures; synthetic code!=0 row extracted (E3)") {
-    assert(EventTables.txErrors(raw).count() === 0L)
+    assert(EventTables.txErrors(raw).count() === Fixture.txErrors)
     // synthesize a failing tx by patching code, then expect one error row
     val patched = raw.withColumn("txs_results",
       transform(col("txs_results"), tx => tx.withField("code", lit("5"))))
@@ -96,12 +99,12 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // keys are decoded ("bonded_ratio"), values stay base64 (reference
     // toDecodedMap semantics, models/Extensions.kt:188)
     assert(mint.contains("bonded_ratio"))
-    assert(mint("amount") === "MA==")
+    assert(mint("amount") === Fixture.mintAmountB64)
     // fully decoded variant (toAttribute semantics)
     val full = be.filter(col("block_height") === 2270374L && col("event_type") === "mint")
       .select(BlockOps.attrsToDecodedMap(col("attributes"))).head()
       .getMap[String, String](0)
-    assert(full("amount") === "0")
+    assert(full("amount") === Fixture.mintAmount)
   }
 
   test("scalar fns: stripQuotes, b64, repeatDecode, hasAttribute (F7-F11)") {
@@ -160,7 +163,7 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(heightsWith === n)
     assert(EventTables.filterByEvents(raw, Seq("no_such_event"), Nil).count() === 0L)
     // 2270417/2270420 have no block_results fixture (left-join nulls) → 98
-    assert(EventTables.filterByEvents(raw, Nil, Seq("mint")).count() === 98L)
+    assert(EventTables.filterByEvents(raw, Nil, Seq("mint")).count() === Fixture.blocksWithMintEvent)
     assert(EventTables.filterByEvents(raw, Nil, Nil).count() === 100L)
   }
 }

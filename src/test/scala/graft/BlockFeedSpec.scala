@@ -110,8 +110,8 @@ class BlockFeedSpec extends AnyFunSuite {
     assert(df.count() === 100L)
     assert(df.schema === graft.blocks.BlockSchemas.raw)
     // full nested fidelity: the explode pipeline yields the fixture totals
-    assert(EventTables.txEvents(df).count() === 9838L)
-    assert(EventTables.blockEvents(df).count() === 2211L)
+    assert(EventTables.txEvents(df).count() === Fixture.txEventRows)
+    assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
     assert(df.filter(col("historical")).count() === 100L)
   }
 
@@ -338,7 +338,7 @@ class BlockFeedSpec extends AnyFunSuite {
     assert(got.except(batch).count() === 0L)
     assert(batch.except(got).count() === 0L)
     // historical slice alone contributes the known 9838 fixture tx events
-    assert(got.agg(sum(col("n"))).head().getLong(0) >= 9838L)
+    assert(got.agg(sum(col("n"))).head().getLong(0) >= Fixture.txEventRows)
   }
 
   test("retry decorator: exponential backoff with jitter on I/O errors (T4)") {

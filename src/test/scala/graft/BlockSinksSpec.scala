@@ -59,7 +59,7 @@ class BlockSinksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nEvents == direct && nEvents > 0)
     // key format
     val k = frames.select(col("key").cast("string")).head().getString(0)
-    assert(k.matches("pio-testnet-1\\.\\d+"))
+    assert(k.matches(s"${Fixture.chainId}\\.\\d+"))
   }
 
   test("K8 multi-sink fan-out executes every sink on one batch") {

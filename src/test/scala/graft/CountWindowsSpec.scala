@@ -41,7 +41,7 @@ class CountWindowsSpec extends AnyFunSuite {
     Iterator.from(0)
       .map(k => (k, heights.slice(k * step, k * step + size)))
       .takeWhile(_._2.length == size)
-      .map { case (k, c) => ("pio-testnet-1", k.toLong, c.length, c.head, c.last) }
+      .map { case (k, c) => (Fixture.chainId, k.toLong, c.length, c.head, c.last) }
       .toSeq
 
   test("streaming tumbling count batches = sorted chunks; partial stays buffered") {

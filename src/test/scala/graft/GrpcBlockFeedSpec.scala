@@ -42,8 +42,8 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
         .option("path", stub.base)
         .option("from", "2270370").option("to", "2270469").load()
       assert(df.count() === 100L)
-      assert(EventTables.txEvents(df).count() === 9838L)
-      assert(EventTables.blockEvents(df).count() === 2211L)
+      assert(EventTables.txEvents(df).count() === Fixture.txEventRows)
+      assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
       assert(df.filter(col("num_txs") > 0).count() === 29L)
     }
   }
@@ -102,7 +102,7 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
       assert(rows.length === 100)
       assert(stub.resultsRequested === 100,
         "full mode must ask the results service once per planned height")
-      assert(stub.resultsServes === 98,
+      assert(stub.resultsServes === Fixture.heightsWithResults,
         "only answered-with-payload requests may count as serves")
       val absent = rows.filter(r => Set(2270417L, 2270420L)(r.getLong(0)))
       assert(absent.length === 2 && absent.forall(_.isNullAt(1)),
@@ -123,7 +123,7 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
       // the begin/end split reconstructed from the mode markers must match
       // the file transport's ground truth — a wrong default would route all
       // finalize events to begin (emptying end) and leak marker attributes
-      assert(EventTables.blockEvents(df).count() === 2211L)
+      assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
       val viaFile = FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L)
       def endTypes(d: org.apache.spark.sql.DataFrame) =
         d.select(explode(col("end_block_events")).as("e")).select(col("e.type"))

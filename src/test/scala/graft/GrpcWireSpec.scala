@@ -59,8 +59,8 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wire = mapper.readTree(viaWire)
     val h = wire.path("result").path("block").path("header")
     assert(h.path("height").asText() === "2270370")
-    assert(h.path("chain_id").asText() === "pio-testnet-1")
-    assert(h.path("time").asText() === "2021-07-15T19:27:44.63516394Z")
+    assert(h.path("chain_id").asText() === Fixture.chainId)
+    assert(h.path("time").asText() === Fixture.firstBlockTime)
     assert(wire.path("result").path("block_id").path("hash").asText() ===
       orig.path("result").path("block_id").path("hash").asText())
   }
@@ -72,7 +72,7 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val txs = wire.path("result").path("txs_results")
     assert(txs.isArray && txs.size() > 0)
     assert(txs.get(0).path("events").size() === 202)
-    assert(txs.get(0).path("gas_wanted").asText() === "6187233")
+    assert(txs.get(0).path("gas_wanted").asText() === Fixture.BigTx.gasWanted)
   }
 
   test("missing height → NOT_FOUND → None (parity with HTTP 404 / missing file)") {

@@ -70,8 +70,8 @@ class HttpBlockFeedSpec extends AnyFunSuite {
         .option("from", "2270370").option("to", "2270469").load()
       assert(df.count() === 100L)
       assert(df.filter(col("historical")).count() === 100L)
-      assert(EventTables.txEvents(df).count() === 9838L)
-      assert(EventTables.blockEvents(df).count() === 2211L)
+      assert(EventTables.txEvents(df).count() === Fixture.txEventRows)
+      assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
       assert(df.filter(col("num_txs") > 0).count() === 29L)
     }
   }

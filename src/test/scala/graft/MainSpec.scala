@@ -64,7 +64,7 @@ class MainSpec extends AnyFunSuite {
       "from=2270370", "to=2270469", s"out=$out",
       "events=tx", "maxHeightsPerTrigger=40", "trigger=availableNow"))
     val ev = Session.get("main-spec").read.parquet(s"$out/batch=*")
-    assert(ev.count() === 9838L) // the fixture's full tx-event total (E1)
+    assert(ev.count() === Fixture.txEventRows) // the fixture's full tx-event total (E1)
     assert(ev.columns.contains("event_type") && ev.columns.contains("tx_hash"))
   }
 
@@ -78,6 +78,6 @@ class MainSpec extends AnyFunSuite {
       .count(_.toString.endsWith(".json"))
     // 27 of the 29 non-empty historical blocks carry a `transfer` tx event
     // (P2 fixture ground truth, cf. p2_filter_by_event_type = 27 rows)
-    assert(n === 27)
+    assert(n === Fixture.blocksWithTransferTxEvent)
   }
 }

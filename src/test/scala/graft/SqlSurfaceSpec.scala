@@ -19,7 +19,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     Tables.registerAll(spark, "/root/testdata/sf0.001")
     // fixture ground truths through SQL
     assert(spark.sql("SELECT count(*) FROM blocks").head().getLong(0) === 100L)
-    assert(spark.sql("SELECT count(*) FROM tx_events").head().getLong(0) === 9838L)
+    assert(spark.sql("SELECT count(*) FROM tx_events").head().getLong(0) === Fixture.txEventRows)
     assert(spark.sql(
       "SELECT count(*) FROM blocks WHERE NOT is_empty").head().getLong(0) === 29L)
     // a join across views (blocks ⋈ tx_events)
