@@ -20,7 +20,10 @@ object Bench {
       graft.blocks.FixtureSource.blocksRaw(spark, t, 2270370L, 2270469L).count()
       graft.blocks.FixtureSource.combinedRaw(spark, t, 2270370L).count()
       graft.sinks.BlockSinks.streamBlockSchema(spark)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println("[bench] warm-up failed:")
+      e.printStackTrace()
+    }
     // Host-calibration probe (SCALE.md "bench book"): the sf0.1 sweep is
     // STRONGLY load-sensitive (identical code has measured 173 s idle vs
     // 2602 s inside a co-tenant slow phase) — a fixed, pinned micro-workload
@@ -251,15 +254,21 @@ object Bench {
     // a fixed path, then end stdout with a compact line — headline totals,
     // streaming envelope, the 10 slowest queries, and a pointer to the full
     // map — that always fits the driver's window.
-    // Subset runs (query-name args, the documented iteration aid) must not
-    // clobber the committed full-sweep snapshot with a partial total that
-    // still claims metric=total -- they go to BENCH_local_subset.json.
+    // The snapshot goes under the git-ignored target/, so a sweep run from
+    // the repo root never overwrites a committed file. Subset runs (query-
+    // name args, the documented iteration aid) must not clobber the
+    // full-sweep snapshot with a partial total that still claims
+    // metric=total -- they go to target/BENCH_local_subset.json.
     val snapPath =
-      if (args.isEmpty) "BENCH_local.json" else "BENCH_local_subset.json"
+      if (args.isEmpty) "target/BENCH_local.json" else "target/BENCH_local_subset.json"
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(snapPath),
-        (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+      val snap = java.nio.file.Paths.get(snapPath)
+      java.nio.file.Files.createDirectories(snap.getParent)
+      java.nio.file.Files.write(snap, (full + "\n").getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] snapshot write to $snapPath failed:")
+      e.printStackTrace()
+    }
     val top = times.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +

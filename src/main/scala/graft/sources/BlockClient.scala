@@ -59,9 +59,11 @@ trait BlockClient extends Serializable {
   def blockResults(height: Long): Option[String]
 
   /** Raw `/blockchain` page JSONs intersecting [from, to] (≤20 heights per
-    * page — `TENDERMINT_MAX_QUERY_RANGE`, `EventStream.kt:73`).
+    * page — `TENDERMINT_MAX_QUERY_RANGE`, `EventStream.kt:73`). The default
+    * means this transport has no paged RPC; the reader fetches each height
+    * via `block()`.
     */
-  def metaPages(from: Long, to: Long): Seq[String]
+  def metaPages(from: Long, to: Long): Seq[String] = Seq.empty
 }
 
 /** THE backoff schedule — `base · 2^attempt ± 25% jitter` (the reference's

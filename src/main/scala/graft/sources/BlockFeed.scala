@@ -387,7 +387,9 @@ class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
 
 /** Per-task reader: full mode fetches `/block` (+ `/block_results`) per
   * height — the reference's 2-RPC fetch (`TendermintBlockFetcher.kt:36`);
-  * meta mode decodes the shared 20-height pages. Missing `block_results`
+  * meta mode decodes the shared 20-height pages (a transport without a
+  * paged RPC, gRPC, serves none, so every height takes the per-height
+  * `/block` backstop with no results RPC). Missing `block_results`
   * degrade to null event columns (left-join parity with the batch path).
   */
 class BlockFeedPartitionReader(client: BlockClient, p: HeightRangePartition,

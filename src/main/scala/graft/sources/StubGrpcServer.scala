@@ -40,8 +40,7 @@ final class StubGrpcServer(dir: String,
                            val liveSrcFrom: Long = 3126935L,
                            resultsLayout: String = "v034",
                            advanceTipAfterFirstPoll: Boolean = false,
-                           maxConcurrentStreams: Int = 0,
-                           delayBlockMillis: Int = 0)
+                           maxConcurrentStreams: Int = 0)
   extends StubChainNode {
 
   require(resultsLayout == "v034" || resultsLayout == "v038",
@@ -173,18 +172,6 @@ final class StubGrpcServer(dir: String,
     }
   }
 
-  /** The slow-lane cursor behind `delayBlockMillis`: the nanoTime at which
-    * the previously scheduled delayed response fires. Each delayed request
-    * schedules itself one delay AFTER max(now, cursor), so responses pace
-    * out strictly serialized — a rate-limited / cold-storage peer that
-    * delivers one response per interval. NB the pacing must be timer-
-    * scheduled, not slept on the loop thread: Http2MultiplexHandler
-    * coalesces child-stream flushes until the parent's read batch
-    * completes, so in-read sleeps serialize the work but flush every
-    * response at once — an all-at-the-end burst, not a drip.
-    */
-  private val slowLaneFreeAt = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Per-stream handler: aggregate request DATA, answer on END_STREAM. */
   private final class StreamHandler extends ChannelInboundHandlerAdapter {
     private var path: String = ""
@@ -209,33 +196,12 @@ final class StubGrpcServer(dir: String,
         io.netty.util.ReferenceCountUtil.release(other)
     }
 
-    private def respond(ctx: ChannelHandlerContext): Unit =
-      if (delayBlockMillis > 0 && path == GrpcBlockClient.GetBlockByHeightPath) {
-        // route() — and ALL its side effects: request counters, transient
-        // fault absorption (failNext budgets) — runs at RECEIPT time; only
-        // the WRITE is paced. Scheduling route() itself made the chaos/proof
-        // hooks nondeterministic: counters ticked at answer time, and
-        // streams the client had already abandoned still consumed fault
-        // budget seconds later (r12 review)
-        val result = routed()
-        val now = System.nanoTime()
-        val at = slowLaneFreeAt.updateAndGet(prev =>
-          math.max(prev, now) + delayBlockMillis * 1000000L)
-        ctx.executor().schedule(new Runnable {
-          override def run(): Unit = answer(ctx, result)
-        }, at - now, java.util.concurrent.TimeUnit.NANOSECONDS)
-        ()
-      } else answer(ctx, routed())
-
-    private def routed(): (Int, String, Option[Array[Byte]]) =
-      try route(path, body.toByteArray)
-      catch { case e: Exception =>
-        (GrpcWire.INTERNAL, s"stub error: ${e.getMessage}", None)
-      }
-
-    private def answer(ctx: ChannelHandlerContext,
-                       result: (Int, String, Option[Array[Byte]])): Unit = {
-      val (status, message, payload) = result
+    private def respond(ctx: ChannelHandlerContext): Unit = {
+      val (status, message, payload) =
+        try route(path, body.toByteArray)
+        catch { case e: Exception =>
+          (GrpcWire.INTERNAL, s"stub error: ${e.getMessage}", None)
+        }
       payload match {
         case Some(msg) =>
           val headers = new DefaultHttp2Headers()
@@ -278,9 +244,9 @@ final class StubGrpcServer(dir: String,
       .childHandler(new ChannelInitializer[Channel] {
         override def initChannel(ch: Channel): Unit = {
           // maxConcurrentStreams > 0 models a conservative node/LB that
-          // advertises a low SETTINGS_MAX_CONCURRENT_STREAMS: the client's
-          // pipelined batch path must QUEUE its excess stream opens against
-          // such a peer, not fail them (GrpcWireSpec pins this)
+          // advertises a low SETTINGS_MAX_CONCURRENT_STREAMS: concurrent
+          // unary calls beyond it must QUEUE their stream opens, not fail
+          // them (GrpcWireSpec pins this)
           val settings = Http2Settings.defaultSettings()
             .initialWindowSize(1 << 20)
             .maxFrameSize(1 << 18)

@@ -1,6 +1,5 @@
 package graft.sources.grpc
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.sources.BlockClient
 import java.io.IOException
 
@@ -14,108 +13,6 @@ object GrpcBlockClient {
     "/cosmos.base.tendermint.v1beta1.Service/GetBlockByHeight"
   val GetBlockResultsPath =
     "/cometbft.services.block_results.v1.BlockResultsService/GetBlockResults"
-
-  /** Absolute ceiling on a pipelined DISPATCH's total await time, in
-    * multiples of the per-call timeout: the inactivity refresh (callMany)
-    * unblocks slow-but-progressing peers, this bounds each dispatched
-    * chunk/batch to 5× the 60 s default = 5 min of task-thread pin.
-    * NB the bound is per DISPATCH, not per page: once the adaptive depth
-    * below has shrunk, a page drains as several chunks, so a peer that
-    * really delivers one response per just-under-budget can still hold a
-    * page's total at ~n×budget — that is the unavoidable price of fetching
-    * n responses from such a peer (it is indistinguishable from a
-    * legitimate rate-limited node), and the pre-chunking alternative was
-    * paying the same wall-clock and then THROWING the responses away in a
-    * livelock. What the ceiling + chunking guarantee together: every
-    * ceiling-length wait now banks its completed responses.
-    */
-  val BatchCeilingFactor = 5L
-
-  /** Sentinel "unlimited" pipeline depth (the healthy-peer default). Kept
-    * finite so the additive re-growth below has a fixed point.
-    */
-  private[graft] val MaxBatchDepth = 1 << 20
-
-  /** Per-endpoint adaptive pipeline depth. The ceiling above cannot tell a
-    * pathological trickler from a LEGITIMATELY slow node that serializes
-    * large responses (20 × ~20 s each > the 5× ceiling at the 60 s default),
-    * and a T4 retry that re-issues the identical full-depth batch against
-    * the same ceiling livelocks: the peer makes constant progress yet the
-    * range is permanently unfetchable. So a ceiling-tripped batch HALVES the
-    * depth its retry will use (floor 1 — where the ceiling degenerates to
-    * 5× a single call's budget, which only a genuinely stalled peer misses),
-    * and a batch that completes chunked at reduced depth grows it back by
-    * ONE (textbook AIMD). Growth must be additive: doubling straight back
-    * would return to the exact depth that just tripped, so a persistently
-    * slow peer alternates trip/drain forever — a full ceiling of abandoned
-    * serialized work plus a T4 backoff on every other page. +1 per completed
-    * batch instead converges just above the sustainable depth; any depth ≥
-    * the page size behaves as unpinned, so a recovered peer is back to
-    * effectively-unlimited within ~page-size successful pages.
-    */
-  private val batchDepth =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      java.util.concurrent.atomic.AtomicInteger]()
-
-  private[grpc] def depthOf(host: String, port: Int): java.util.concurrent.atomic.AtomicInteger =
-    batchDepth.computeIfAbsent((host, port),
-      _ => new java.util.concurrent.atomic.AtomicInteger(MaxBatchDepth))
-
-  /** Test view: the pipeline depth the next batch against the endpoint will
-    * dispatch at (GrpcWireSpec's ceiling-livelock regression asserts the
-    * shrink/re-grow cycle).
-    */
-  private[graft] def pipelineDepth(host: String, port: Int): Int =
-    depthOf(host, port).get()
-
-  /** Once-per-INCIDENT shrink: clamp the depth to half the FAILED BATCH'S
-    * OWN dispatch depth, not half the current value. The pool is shared by
-    * every task on the executor, so ONE slow incident trips the ceiling in
-    * many concurrently in-flight batches — halving the current value once
-    * per tripped batch would collapse 20→10→5→2→1 in a single incident,
-    * leaving the endpoint fully serial. The clamp is idempotent across an
-    * incident's sibling trips (every batch dispatched at depth 20 computes
-    * the same target 10, and min(d, 10) lands there exactly once) yet can
-    * never be LOST: unlike a CAS from the observed depth, a concurrent
-    * regrow (+1) or an earlier sibling's shrink moving the value does not
-    * make this trip a no-op — the clamp still lands, so a genuine incident
-    * never costs the T4 retry a second full-ceiling round at an un-shrunk
-    * depth. A batch dispatched at an ALREADY-shrunk depth that still trips
-    * computes a lower target, so a genuinely slower peer walks down.
-    * Returns the post-clamp depth.
-    */
-  private[graft] def shrinkOnCeilingTrip(
-      depthRef: java.util.concurrent.atomic.AtomicInteger,
-      depthAtDispatch: Int, batchSize: Int): Int = {
-    val target = math.max(1, math.min(depthAtDispatch, batchSize) / 2)
-    depthRef.updateAndGet(d => math.min(d, target))
-  }
-
-  /** Once-per-incident-window regrow, the additive half of the AIMD pair:
-    * CAS from the depth observed at dispatch so a wave of 32 concurrently
-    * completing chunked batches regrows +1 total, not +32 (which would
-    * overshoot straight past the depth that just tripped and re-trip every
-    * other page).
-    */
-  private[graft] def regrowAfterChunkedBatch(
-      depthRef: java.util.concurrent.atomic.AtomicInteger,
-      depthAtDispatch: Int): Boolean =
-    depthRef.compareAndSet(depthAtDispatch,
-      math.min(MaxBatchDepth, depthAtDispatch + 1))
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[GrpcBlockClient])
-
-  /** (host, port, requestedTimeout) triples already warned about — one line
-    * per distinct conflict, not one per RPC.
-    */
-  private val warnedTimeoutConflicts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, Int)]()
-
-  /** Test view: distinct first-dial-wins timeout conflicts observed
-    * (GrpcWireSpec pins that a conflicting later dial is flagged, once).
-    * The warned-set IS the count — no separate counter to drift.
-    */
-  private[graft] def timeoutConflicts: Int = warnedTimeoutConflicts.size()
 
   /** A small fixed pool of connections per (host, port) per JVM, shared by
     * every task on the executor — the gRPC twin of the JDK keep-alive pool
@@ -134,44 +31,11 @@ object GrpcBlockClient {
   private val pool =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[GrpcConnection]]()
 
-  /** The default per-call timeout (the gRPC-conventional 60 s), applied
-    * when the URI names no callTimeoutMillis.
-    */
-  private[grpc] val DefaultCallTimeoutMillis = 60000
-
-  /** The per-call timeout is applied when a (host, port) slot is FIRST
-    * dialed (the pool is keyed by endpoint; a later client naming a
-    * different timeout for the same endpoint keeps the existing pool —
-    * endpoints are per-stub in tests and per-node in deployment, so the
-    * first-wins rule never bites in practice). Because a user-visible
-    * option silently not taking effect is unreadable from the outside, a
-    * later client whose timeout CONFLICTS with the pooled one is warned
-    * about — once per distinct conflict, not per RPC. The timeout is an
-    * Option so only an EXPLICITLY requested value can conflict: a client
-    * that never set the option must not be warned that "the requested
-    * 60000 is ignored" just because the pool was dialed at 30000.
-    */
-  private[grpc] def connection(host: String, port: Int,
-                               requestedTimeoutMillis: Option[Int] = None): GrpcConnection = {
+  private[grpc] def connection(host: String, port: Int): GrpcConnection = {
     val conns = pool.computeIfAbsent((host, port),
-      { case (h, p) => Array.fill(GrpcWire.PoolSize)(
-          new GrpcConnection(h, p, callTimeoutMillis =
-            requestedTimeoutMillis.getOrElse(DefaultCallTimeoutMillis))) })
-    requestedTimeoutMillis.foreach { t =>
-      if (conns(0).callTimeoutMillis != t &&
-          warnedTimeoutConflicts.add((host, port, t))) {
-        log.warn(s"grpc://$host:$port was first dialed with callTimeoutMillis=" +
-          s"${conns(0).callTimeoutMillis}; the requested $t is " +
-          "ignored (the connection pool is per-endpoint, first-dial-wins)")
-      }
-    }
+      { case (h, p) => Array.fill(GrpcWire.PoolSize)(new GrpcConnection(h, p)) })
     conns((Thread.currentThread().getId % GrpcWire.PoolSize).toInt)
   }
-
-  /** Shared, thread-safe (read/write-only use) mapper for meta-page
-    * assembly — not one instance per metaPages call.
-    */
-  private[grpc] val mapper = new ObjectMapper()
 }
 
 /** S16 — the gRPC transport under the blockfeed connector: the reference's
@@ -205,10 +69,10 @@ object GrpcBlockClient {
   *     sniffed from the wire (both field 3s are repeated Events), so it is
   *     a connection option — the other two services are the standard
   *     cosmos-sdk ones, identical across versions.
-  *   - `metaPages`: gRPC has no paged `/blockchain` RPC, so meta-only scans
-  *     DEGRADE to per-height `GetBlockByHeight` fetches re-assembled into
-  *     20-height pages; `block_size` is the serialized response size (the
-  *     only size a gRPC client observes). Full-mode reads never call this.
+  *   - `metaPages`: gRPC has no paged `/blockchain` RPC, so this client
+  *     keeps the [[BlockClient]] default (no pages) and a header-only scan
+  *     reads every planned height through the reader's per-height `block()`
+  *     fallback — one `GetBlockByHeight` per height, no results RPC.
   *
   * grpc-status taxonomy → the T4 retry contract
   * ([[graft.sources.RetryingBlockClient]]):
@@ -223,12 +87,18 @@ object GrpcBlockClient {
   */
 final class GrpcBlockClient(base: String) extends BlockClient {
 
-  private val (host, port, resultsV038, requestedTimeoutMillis) = {
+  private val (host, port, resultsV038) = {
     val (hpPart, query) = base.stripPrefix("grpc://").split("\\?", 2) match {
       case Array(hp, q) => (hp, q)
       case Array(hp) => (hp, "")
     }
     val params = query.split("&").filter(_.nonEmpty).map(_.split("=", 2))
+    // `results` is the only option: an unknown name (a typo, or a
+    // parameter an older build accepted) must fail here, not be ignored
+    params.map(_(0)).find(_ != "results").foreach { name =>
+      throw new IllegalArgumentException(
+        s"unknown parameter '$name' in $base (only results=v034|v038)")
+    }
     // default v038: every real node that serves the BlockResultsService is
     // ≥0.38 (the service did not exist before), and the layouts cannot be
     // sniffed apart on the wire — defaulting to the fixtures' v034 shape
@@ -241,35 +111,14 @@ final class GrpcBlockClient(base: String) extends BlockClient {
       case Some(other) => throw new IllegalArgumentException(
         s"unknown results layout '$other' in $base (v034 | v038)")
     }
-    // per-call timeout, first-dial-wins per endpoint (the pool note on
-    // GrpcBlockClient.connection); None = URI named no timeout, so this
-    // client takes whatever the pool's FIRST dial set (the 60 s default
-    // only if THIS client creates the pool) and is never warned about a
-    // conflict — it requested nothing to conflict with.
-    // Validated like results= above: a bare .toInt would surface a raw
-    // NumberFormatException without the URI context, and a 0/negative value
-    // would make every call on the endpoint's first-dial-wins pool time out
-    // instantly with nothing pointing at the option
-    val timeoutMs: Option[Int] =
-      params.collectFirst { case Array("callTimeoutMillis", v) => v }.map { v =>
-        val n = try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"callTimeoutMillis must be a positive integer, got '$v' in $base")
-        }
-        if (n <= 0) throw new IllegalArgumentException(
-          s"callTimeoutMillis must be > 0, got $n in $base")
-        n
-      }
     hpPart.stripSuffix("/").split(":", 2) match {
-      case Array(h, p) => (h, p.toInt, v038, timeoutMs)
+      case Array(h, p) => (h, p.toInt, v038)
       case _ => throw new IllegalArgumentException(
-        s"grpc:// URI must be grpc://host:port[?results=v034|v038]" +
-          s"[&callTimeoutMillis=n], got $base")
+        s"grpc:// URI must be grpc://host:port[?results=v034|v038], got $base")
     }
   }
 
-  private def conn: GrpcConnection =
-    GrpcBlockClient.connection(host, port, requestedTimeoutMillis)
+  private def conn: GrpcConnection = GrpcBlockClient.connection(host, port)
 
   /** The grpc-status → Option/exception taxonomy (class scaladoc). */
   private def taxonomy(path: String, res: GrpcWire.GrpcResponse): Option[Array[Byte]] =
@@ -287,112 +136,6 @@ final class GrpcBlockClient(base: String) extends BlockClient {
   /** status-taxonomy'd unary call: Some(proto payload) | None (NOT_FOUND). */
   private def call(path: String, request: Array[Byte]): Option[Array[Byte]] =
     taxonomy(path, conn.unary(path, request))
-
-  /** Pipelined batch of unary calls: all requests dispatched before any
-    * response is awaited, so a batch costs ~one round-trip on the
-    * multiplexed connection instead of n (the connection's 16-way
-    * concurrency is spec-pinned; a real node's HTTP/2 layer multiplexes the
-    * same way). A transient failure on ANY call propagates as IOException —
-    * the T4 retry above re-issues the batch, same as it re-issues a failed
-    * serial loop.
-    */
-  private def callMany(path: String, requests: Seq[Array[Byte]]): Seq[Option[Array[Byte]]] = {
-    val depthRef = GrpcBlockClient.depthOf(host, port)
-    val depth = depthRef.get()
-    if (requests.size <= depth) callChunk(path, requests, depthRef, depth)
-    else {
-      // a prior batch against this endpoint tripped the absolute ceiling
-      // (a slow peer serializing responses, not a stalled one) and shrank
-      // the depth: re-issue in depth-sized chunks so each chunk's
-      // serialized-response total fits under its OWN ceiling and the peer
-      // drains instead of livelocking on identical full-depth retries
-      val out = requests.grouped(depth)
-        .flatMap(chunk => callChunk(path, chunk, depthRef, depth)).toVector
-      // the whole chunked batch completed: re-grow by ONE (additive — the
-      // batchDepth scaladoc's anti-oscillation rationale) so one slow
-      // incident does not leave the endpoint serial forever, without
-      // bouncing straight back to the depth that just tripped; CAS'd from
-      // the observed depth (regrowAfterChunkedBatch's concurrency note)
-      GrpcBlockClient.regrowAfterChunkedBatch(depthRef, depth)
-      out
-    }
-  }
-
-  private def callChunk(path: String, requests: Seq[Array[Byte]],
-                        depthRef: java.util.concurrent.atomic.AtomicInteger,
-                        depthAtDispatch: Int): Seq[Option[Array[Byte]]] = {
-    val c = conn
-    // dispatch under try/catch: a start() that throws mid-loop (stream-open
-    // failure on a draining connection) must abort the already-dispatched
-    // siblings HERE, not rely on evict()'s parent-close to sweep them up —
-    // if a future start-failure path stops evicting, those streams would
-    // leak on the immortal pooled connection
-    val dispatched = scala.collection.mutable.ArrayBuffer.empty[c.PendingCall]
-    try requests.foreach(r => dispatched += c.start(path, r))
-    catch {
-      case scala.util.control.NonFatal(t) =>
-        dispatched.foreach(_.abort())
-        throw t
-    }
-    // INACTIVITY budget, not one fresh budget per await: the deadline
-    // refreshes each time a response completes, so a STALLED peer costs the
-    // task thread ~one callTimeoutMillis total (sequential fresh budgets
-    // would block up to n× before the T4 retry saw an error), while a
-    // slow-but-PROGRESSING peer (rate-limited node delivering a response
-    // every few seconds) never starves — a fixed whole-batch budget would
-    // make such a peer permanently unfetchable, since every T4 retry would
-    // re-issue the same over-budget batch. The refresh runs under an
-    // ABSOLUTE ceiling (BatchCeilingFactor × budget) so a pathological peer
-    // trickling one response per just-under-budget still cannot pin the
-    // task thread for n× — the two bounds together: per-response stalls
-    // ≤ 1 budget, whole batch ≤ the ceiling
-    val ceiling = c.deadlineFromNow(GrpcBlockClient.BatchCeilingFactor)
-    var deadline = math.min(c.deadlineFromNow(), ceiling)
-    // on the first failure, ABORT the not-yet-awaited siblings instead of
-    // abandoning them: their streams would otherwise stay registered on the
-    // immortal pooled connection (and hold the peer's concurrent-stream
-    // budget) until the connection dies — one leak per retry round
-    var failure: Throwable = null
-    var ceilingTripped = false
-    val results = dispatched.toSeq.map { p =>
-      if (failure != null) { p.abort(); None }
-      // NonFatal only: an OutOfMemoryError mid-batch must propagate NOW,
-      // not be parked while the loop keeps allocating through 19 aborts
-      else try {
-        val res = taxonomy(path, p.await(deadline))
-        deadline = math.min(c.deadlineFromNow(), ceiling) // progress: refresh
-        res
-      }
-      catch {
-        case t: GrpcWire.CallTimeoutException =>
-          // deadline still holds the bound the FAILED await used (the
-          // refresh only runs on success), so deadline == ceiling tells the
-          // two timeout causes apart right here: the CEILING binding means
-          // the peer kept progressing but the batch as a whole overran —
-          // the shrink-the-retry's-depth case; the fresh inactivity budget
-          // binding is a genuine stall, where shrinking would not help and
-          // the T4 backoff is the right response. The distinction is
-          // inherently ambiguous in the LAST budget-sized window before the
-          // ceiling (a peer that progressed until then and THEN stalled
-          // times out with the ceiling binding): we conservatively shrink
-          // there — against a dead peer the chunked retry fails in ~one
-          // budget just like the full-depth one would, and the depth
-          // re-grows additively, so the misclassification costs nothing
-          // durable
-          if (deadline == ceiling) ceilingTripped = true
-          failure = t; None
-        case scala.util.control.NonFatal(t) => failure = t; None
-      }
-    }
-    if (failure != null) {
-      // once per INCIDENT, not once per tripped batch (shrinkOnCeilingTrip's
-      // concurrency note — the pool is executor-shared)
-      if (ceilingTripped)
-        GrpcBlockClient.shrinkOnCeilingTrip(depthRef, depthAtDispatch, requests.size)
-      throw failure
-    }
-    results
-  }
 
   override def currentHeight(): Long =
     call(GrpcBlockClient.GetLatestBlockPath, Array.emptyByteArray)
@@ -415,38 +158,4 @@ final class GrpcBlockClient(base: String) extends BlockClient {
       TendermintGrpcCodec.encodeHeightRequest(height))
       .map(if (resultsV038) TendermintGrpcCodec.decodeBlockResultsResponseV038
            else TendermintGrpcCodec.decodeBlockResultsResponse)
-
-  override def metaPages(from: Long, to: Long): Seq[String] = {
-    val mapper = GrpcBlockClient.mapper
-    (from to to by 20L).iterator.map { lo =>
-      val hi = math.min(lo + 19L, to)
-      val metas = mapper.createArrayNode()
-      // the page's ≤20 fetches are PIPELINED on the multiplexed connection
-      // (callMany): a serial loop paid one round-trip per height, ~20× the
-      // latency of the HTTP transport's single paged /blockchain RPC —
-      // measured 20-40 ms/page serial vs ~2-4 ms pipelined on loopback
-      val payloads = callMany(GrpcBlockClient.GetBlockByHeightPath,
-        (lo to hi).map(TendermintGrpcCodec.encodeHeightRequest))
-      payloads.foreach {
-        _.foreach { payload =>
-          // meta-only decode: header + block_id + tx COUNT, skipping the tx
-          // payloads and the ~100-signature commit a meta entry never reads
-          // (full decodes made this path CPU-bound — SCALE.md)
-          val (blockId, header, numTxs) = TendermintGrpcCodec.decodeBlockMeta(payload)
-          val meta = metas.addObject()
-          meta.set[com.fasterxml.jackson.databind.JsonNode]("block_id", blockId)
-          meta.put("block_size", payload.length.toString)
-          meta.put("num_txs", numTxs.toString)
-          meta.set[com.fasterxml.jackson.databind.JsonNode]("header", header)
-        }
-      }
-      val root = mapper.createObjectNode()
-      root.put("jsonrpc", "2.0")
-      root.put("id", -1)
-      val res = root.putObject("result")
-      res.put("last_height", to.toString)
-      res.set[com.fasterxml.jackson.databind.JsonNode]("block_metas", metas)
-      mapper.writeValueAsString(root)
-    }.toSeq
-  }
 }

@@ -50,15 +50,6 @@ object GrpcWire {
 
   final case class GrpcResponse(status: Int, message: String, payload: Array[Byte])
 
-  /** An await that ran out its deadline — a DISTINCT IOException subtype so
-    * a batch issuer can recognize its own expired deadline structurally (a
-    * ceiling-tripped batch shrinks the pipeline depth its retry will use —
-    * [[GrpcBlockClient]]'s callMany) without string-matching the message.
-    * Still an IOException: the T4 retry ladder treats it as the transient
-    * it is, exactly as before.
-    */
-  final class CallTimeoutException(msg: String) extends IOException(msg)
-
   /** Prefix `msg` with the gRPC frame header (flag 0 + u32 length). */
   def frame(msg: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](5 + msg.length)
@@ -109,10 +100,7 @@ object GrpcWire {
   */
 final class GrpcConnection(host: String, port: Int,
                            connectTimeoutMillis: Int = 10000,
-                           // val: the pool compares a later client's
-                           // requested timeout against the dialed one to
-                           // warn on a first-dial-wins conflict
-                           private[graft] val callTimeoutMillis: Int = 60000) {
+                           callTimeoutMillis: Int = 60000) {
 
   // CAS slot, not a synchronized field: evict() may be called from a netty
   // event-loop thread (stream-open failure callbacks), and a monitor shared
@@ -149,12 +137,13 @@ final class GrpcConnection(host: String, port: Int,
                     // several hundred KiB; the default 64 KiB window would
                     // stall mid-response until WINDOW_UPDATE round-trips
                     .maxFrameSize(1 << 18))
-                  // the pipelined meta path dispatches up to 20 streams
-                  // before awaiting any; a peer legally advertising a lower
+                  // an executor's 32 task threads share the PoolSize (4)
+                  // connections, so ~8 unary calls ride one connection at
+                  // once; a peer legally advertising a lower
                   // SETTINGS_MAX_CONCURRENT_STREAMS must make the excess
                   // opens QUEUE (netty buffers them until capacity frees),
                   // not fail their HEADERS write — without this, every T4
-                  // retry would re-issue the same over-limit burst and
+                  // retry would re-issue the same over-limit calls and
                   // re-fail against that peer forever
                   .encoderEnforceMaxConcurrentStreams(true)
                   .build(),
@@ -209,82 +198,14 @@ final class GrpcConnection(host: String, port: Int,
     */
   private[graft] def pooledChannel: Channel = parent.get()
 
-  /** A dispatched unary call awaiting its response: the pipelining handle
-    * behind [[unary]]. `await()` blocks the calling task thread; on timeout
-    * the stream channel is closed so it does not linger on the event loop.
-    */
-  final class PendingCall private[GrpcConnection] (
-      done: CompletableFuture[GrpcWire.GrpcResponse],
-      stream: Channel, path: String) {
-    def await(): GrpcWire.GrpcResponse = await(deadlineFromNow())
-
-    /** Await against an absolute deadline — the batch form. A pipelined
-      * batch's calls all travel concurrently on the one connection, so the
-      * issuer awaits them under an INACTIVITY budget (one
-      * `callTimeoutMillis` refreshed on every completed response — see
-      * [[graft.sources.grpc.GrpcBlockClient]]'s callMany) instead of a
-      * fresh full budget per sequential await, which against a
-      * stalled-but-open peer would block the task thread for up to n× the
-      * intended timeout before the T4 retry ever saw an error. An
-      * already-expired deadline times out immediately (`done.get(0, …)`
-      * still returns a completed future's value, so responses that already
-      * arrived are never discarded).
-      */
-    def await(deadlineNanos: Long): GrpcWire.GrpcResponse = {
-      val waitedNanos = math.max(0L, deadlineNanos - System.nanoTime())
-      try done.get(waitedNanos, TimeUnit.NANOSECONDS)
-      catch {
-        case e: java.util.concurrent.ExecutionException => e.getCause match {
-          case io: IOException => throw io
-          case c => throw new IOException("gRPC call failed", c)
-        }
-        case _: java.util.concurrent.TimeoutException =>
-          stream.close()
-          // report the wait THIS call actually got, not the configured
-          // per-batch budget: under a shared batch deadline a late sibling
-          // may have had almost nothing left, and logging 60000 ms for a
-          // 1 s wait misdiagnoses the peer's stall pattern
-          throw new GrpcWire.CallTimeoutException(
-            s"gRPC call timeout after ${waitedNanos / 1000000L} ms " +
-              s"(budget $callTimeoutMillis ms): $path")
-      }
-    }
-
-    /** Abandon the call: close its stream channel without waiting. Used by
-      * a batch issuer when a SIBLING call failed — the un-awaited streams
-      * would otherwise stay registered on the immortal pooled parent (and
-      * hold the peer's concurrent-stream budget) until the parent dies.
-      * Closing a stream whose handler already completed is harmless.
-      */
-    def abort(): Unit = { stream.close(); () }
-  }
-
-  /** Absolute deadline `factor × callTimeoutMillis` from now — what a batch
-    * issuer passes to [[PendingCall.await(deadlineNanos*)]], refreshing the
-    * factor-1 form on each completed response (the inactivity-budget
-    * contract: a stalled peer costs ~one budget total, a progressing peer
-    * never starves) under a factor-k absolute ceiling (so a pathological
-    * peer trickling one response per just-under-budget cannot pin the task
-    * thread unboundedly).
-    */
-  def deadlineFromNow(factor: Long = 1L): Long =
-    System.nanoTime() + factor * callTimeoutMillis * 1000000L
-
   /** Blocking unary call. Returns the peer's grpc-status + raw (unframed)
     * response payload; transport-level failures surface as IOException so
     * [[graft.sources.RetryingBlockClient]]'s T4 backoff applies unchanged.
+    * Blocks the calling task thread for at most `callTimeoutMillis` once
+    * the stream is open; on timeout the stream channel is closed so it
+    * does not linger on the event loop.
     */
-  def unary(path: String, request: Array[Byte]): GrpcWire.GrpcResponse =
-    start(path, request).await()
-
-  /** Dispatch a unary call WITHOUT waiting for its response — the HTTP/2
-    * stream is opened and the request written before this returns, so N
-    * `start`s followed by N `await`s pipeline N calls on the one multiplexed
-    * connection (one round-trip total instead of N): the degraded gRPC
-    * meta-page path lives on this. Stream-open failure still evicts the
-    * parent and throws synchronously, exactly as a blocking call would.
-    */
-  def start(path: String, request: Array[Byte]): PendingCall = {
+  def unary(path: String, request: Array[Byte]): GrpcWire.GrpcResponse = {
     val ch = connectedChannel()
     val done = new CompletableFuture[GrpcWire.GrpcResponse]()
 
@@ -397,7 +318,16 @@ final class GrpcConnection(host: String, port: Int,
       Unpooled.wrappedBuffer(GrpcWire.frame(request)), true))
       .addListener(failOnWriteError)
 
-    new PendingCall(done, stream, path)
+    try done.get(callTimeoutMillis.toLong, TimeUnit.MILLISECONDS)
+    catch {
+      case e: java.util.concurrent.ExecutionException => e.getCause match {
+        case io: IOException => throw io
+        case c => throw new IOException("gRPC call failed", c)
+      }
+      case _: java.util.concurrent.TimeoutException =>
+        stream.close()
+        throw new IOException(s"gRPC call timeout after $callTimeoutMillis ms: $path")
+    }
   }
 
   /** Drops the current channel; NOT terminal — the next `unary` dials fresh

@@ -476,11 +476,9 @@ object TendermintGrpcCodec {
   }
 
   /** `GetBlockByHeightResponse`/`GetLatestBlockResponse` bytes → the
-    * engine's `/block` JSON-RPC envelope, as a Jackson tree (the meta-page
-    * path reads fields off the tree directly — stringify-then-reparse would
-    * double the JSON work per height on the degraded meta scan).
+    * engine's `/block` JSON-RPC envelope.
     */
-  def decodeBlockResponseNode(bytes: Array[Byte]): ObjectNode = {
+  def decodeBlockResponse(bytes: Array[Byte]): String = {
     val r = new Reader(bytes)
     var blockId: ObjectNode = null; var block: ObjectNode = null
     while (r.hasNext) {
@@ -495,43 +493,7 @@ object TendermintGrpcCodec {
     val result = root.putObject("result")
     if (blockId != null) result.set[JsonNode]("block_id", blockId)
     if (block != null) result.set[JsonNode]("block", block)
-    root
-  }
-
-  def decodeBlockResponse(bytes: Array[Byte]): String =
-    mapper.writeValueAsString(decodeBlockResponseNode(bytes))
-
-  /** Meta-only decode of a block response: (block_id, header, num_txs) —
-    * the three things a `/blockchain`-page entry carries. Skips the tx
-    * payloads (only counts them) and the ENTIRE commit, whose ~100
-    * signatures of hex/base64 bridging dominate a full [[decBlock]]; the
-    * degraded gRPC meta path decodes 20 blocks per page, so full decodes
-    * would bill that cost 20× per page for fields the meta entry never
-    * reads. Measured ~3× on the whole meta-scan path (SCALE.md).
-    */
-  def decodeBlockMeta(bytes: Array[Byte]): (ObjectNode, ObjectNode, Int) = {
-    val r = new Reader(bytes)
-    var blockId: ObjectNode = null; var header: ObjectNode = null
-    var numTxs = 0
-    while (r.hasNext) {
-      val (f, w) = r.tag()
-      if (f == 1 && w == 2) { val (s, e) = r.lenDelimited(); blockId = decBlockId(r.subReader(s, e)) }
-      else if (f == 2 && w == 2) {
-        val (s, e) = r.lenDelimited(); val br = r.subReader(s, e)
-        while (br.hasNext) {
-          val (bf, bw) = br.tag()
-          if (bf == 1 && bw == 2) { val (hs, he) = br.lenDelimited(); header = decHeader(br.subReader(hs, he)) }
-          else if (bf == 2 && bw == 2) {
-            val (ds, de) = br.lenDelimited(); val dr = br.subReader(ds, de)
-            while (dr.hasNext) {
-              val (df, dw) = dr.tag()
-              if (df == 1 && dw == 2) { dr.skip(dw); numTxs += 1 } else dr.skip(dw)
-            }
-          } else br.skip(bw)
-        }
-      } else r.skip(w)
-    }
-    (blockId, header, numTxs)
+    mapper.writeValueAsString(root)
   }
 
   /** header.height of a block response, without building the JSON. */

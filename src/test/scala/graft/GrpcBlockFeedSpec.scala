@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The gRPC transport THROUGH the connector (the HttpBlockFeedSpec
   * scenarios on the fourth transport): batch scans, pushdown-driven mode
-  * selection, and the meta-page degrade must all produce the same
+  * selection, and the per-height meta degrade must all produce the same
   * 100/29 ground truth as the file transport when the only thing that
   * changed is `path = grpc://…`. The wire itself (framing, status taxonomy,
   * codec round-trip) is covered by GrpcWireSpec/GrpcCodecSpec; the gate
@@ -34,6 +34,15 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
     assert(BlockClient.open("grpc://127.0.0.1:1?results=v038").isInstanceOf[GrpcBlockClient])
     intercept[IllegalArgumentException](BlockClient.open("grpc://127.0.0.1:1?results=v2"))
     intercept[IllegalArgumentException](BlockClient.open("grpc://no-port"))
+    // `results` is the only URI option: any other name fails naming both
+    // the parameter and the URI (a removed option must not be silently
+    // ignored)
+    for (uri <- Seq("grpc://127.0.0.1:1?callTimeoutMillis=400",
+                    "grpc://127.0.0.1:1?results=v034&callTimeoutMillis=400")) {
+      val e = intercept[IllegalArgumentException](BlockClient.open(uri))
+      assert(e.getMessage.contains("callTimeoutMillis") && e.getMessage.contains(uri),
+        e.getMessage)
+    }
   }
 
   test("S1 batch scan over grpc: 100 rows, same event totals as file transport") {
@@ -49,19 +58,26 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
   }
 
   test("S3 over grpc: header-only projection takes the (degraded) meta path") {
+    // gRPC has no paged /blockchain RPC: a meta-mode scan reads every
+    // planned height through the reader's per-height block() fallback —
+    // one GetBlockByHeight per height and no results RPC — and must yield
+    // the file transport's meta-safe columns exactly
+    val metaCols = Seq("height", "time", "chain_id", "num_txs", "historical", "block_id")
+    def scan(path: String) = spark.read.format("blockfeed")
+      .option("path", path)
+      .option("from", "2270370").option("to", "2270409").load()
+      .select(metaCols.map(col): _*)
     withStub { stub =>
-      val df = spark.read.format("blockfeed")
-        .option("path", stub.base)
-        .option("from", "2270370").option("to", "2270409").load()
-        .select("height", "time", "chain_id", "num_txs", "historical")
+      val df = scan(stub.base)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("mode=meta"), s"expected meta mode:\n$plan")
-      assert(df.count() === 40L)
-      // same header facts as the file transport's meta pages
-      val viaFile = FixtureSource.blockMetas(spark, T, 2270370L, 2270409L)
-        .select("height", "chain_id", "num_txs")
-      assert(df.select("height", "chain_id", "num_txs")
-        .exceptAll(viaFile).count() === 0L)
+      val viaGrpc = df.collect().sortBy(_.getLong(0)).toSeq
+      assert(viaGrpc.size === 40)
+      assert(stub.blockServesIn(2270370L, 2270409L) === 40,
+        "expected exactly one block fetch per planned height")
+      assert(stub.resultsRequested === 0, "a meta scan asked for block results")
+      val viaFile = scan(T).collect().sortBy(_.getLong(0)).toSeq
+      assert(viaGrpc === viaFile)
     }
   }
 

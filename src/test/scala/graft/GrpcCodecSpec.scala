@@ -170,24 +170,6 @@ class GrpcCodecSpec extends AnyFunSuite {
     assert(ev.get(0).path("value").isNull) // content not reconstructed, by design
   }
 
-  test("meta-only decode agrees with the full decode for the whole corpus") {
-    // decodeBlockMeta is the degraded gRPC meta path's CPU shortcut (skips
-    // tx payloads and the commit) — its three outputs must equal what a
-    // full decode would have produced, for every template block
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(s"$T/block")
-    val files = java.nio.file.Files.list(dir).iterator().asScala.toSeq
-    assert(files.size >= 100)
-    files.foreach { p =>
-      val wire = C.encodeBlockResponse(resolved(p.toString))
-      val full = C.decodeBlockResponseNode(wire).path("result")
-      val (blockId, header, numTxs) = C.decodeBlockMeta(wire)
-      assert(same(blockId, full.path("block_id")).isEmpty, p.getFileName)
-      assert(same(header, full.path("block").path("header")).isEmpty, p.getFileName)
-      assert(numTxs === full.path("block").path("data").path("txs").size(), p.getFileName)
-    }
-  }
-
   // ------------------------------------------------------------------
   // 3. the ≥0.38 block-results layout (finalize_block_events + mode markers)
   // ------------------------------------------------------------------

@@ -205,57 +205,49 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("metaPages: 20-height pages synthesized from per-height fetches") {
-    val pages = client.metaPages(2270370L, 2270410L)
-    assert(pages.size === 3) // 370-389, 390-409, 410
-    val metas = mapper.readTree(pages.head).path("result").path("block_metas")
-    assert(metas.size() === 20)
-    assert(metas.get(0).path("header").path("height").asText() === "2270370")
-    assert(metas.get(0).path("num_txs").isTextual) // JSON-string like the RPC
-  }
-
-  test("pipelined batch against a low max-concurrent-streams peer queues, not fails") {
+  test("concurrent unary calls beyond a low max-concurrent-streams peer queue, not fail") {
     // a conservative node/LB may legally advertise MAX_CONCURRENT_STREAMS
-    // below the meta path's 20-deep dispatch; the client codec enforces the
-    // advertised limit by QUEUEING excess stream opens (not failing their
-    // HEADERS writes), so the batch completes correctly — just with bounded
-    // in-flight depth. Pre-fix behavior: 'Maximum active streams violated'
-    // → IOException → every T4 retry re-fails identically.
+    // below the number of task threads sharing one pooled connection; the
+    // client codec enforces the advertised limit by QUEUEING excess stream
+    // opens (not failing their HEADERS writes), so every call completes —
+    // just with bounded in-flight depth. Without the enforcement: 'Maximum
+    // active streams violated' → IOException → every T4 retry re-fails.
     val low = new StubGrpcServer(T, maxConcurrentStreams = 4)
+    val conn = new GrpcConnection("127.0.0.1", low.port)
+    val threads = 16
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      val c = new GrpcBlockClient(low.base)
-      // settle the SETTINGS exchange first so the 20-deep dispatch below
-      // deterministically runs AGAINST the known limit (dispatching during
-      // the preface race would test nothing)
-      assert(c.currentHeight() === 2270469L)
-      val pages = c.metaPages(2270370L, 2270410L)
-      assert(pages.size === 3)
-      val metas = mapper.readTree(pages.head).path("result").path("block_metas")
-      assert(metas.size() === 20)
-      assert(metas.get(19).path("header").path("height").asText() === "2270389")
-      assert(low.blockServesIn(2270370L, 2270410L) === 41)
-    } finally low.stop()
-  }
-
-  test("a transient mid-batch fails the pipelined call fast and leaves the connection usable") {
-    // one UNAVAILABLE inside a 20-deep pipelined page: the batch must
-    // surface IOException (the T4 contract — the retry wrapper above
-    // re-issues the page), the not-yet-awaited siblings are aborted rather
-    // than left registered on the pooled connection, and the SAME
-    // connection must serve the retried batch correctly — a leaked stream
-    // budget or a poisoned parent would fail the second call
-    val iso = new StubGrpcServer(T)
-    try {
-      val c = new GrpcBlockClient(iso.base)
-      assert(c.currentHeight() === 2270469L) // dial + settle SETTINGS
-      iso.failNext(1)
-      intercept[java.io.IOException](c.metaPages(2270370L, 2270389L))
-      // the same un-retried client, same pooled connection: full page, clean
-      val pages = c.metaPages(2270370L, 2270389L)
-      assert(pages.size === 1)
-      assert(mapper.readTree(pages.head).path("result")
-        .path("block_metas").size() === 20)
-    } finally iso.stop()
+      // settle the SETTINGS exchange first so the burst below
+      // deterministically runs AGAINST the known limit (calls during the
+      // preface race would test nothing)
+      assert(conn.unary(GrpcBlockClient.GetLatestBlockPath,
+        Array.emptyByteArray).status === GrpcWire.OK)
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val heights = (2270370L until 2270370L + 3 * threads).toSeq
+      val futures = heights.grouped(3).toSeq.map { hs =>
+        Future {
+          go.await()
+          hs.map { h =>
+            val req = graft.sources.grpc.TendermintGrpcCodec.encodeHeightRequest(h)
+            val res = conn.unary(GrpcBlockClient.GetBlockByHeightPath, req)
+            assert(res.status === GrpcWire.OK)
+            graft.sources.grpc.TendermintGrpcCodec
+              .latestHeightOf(GrpcWire.unframe(res.payload))
+          }
+        }
+      }
+      go.countDown() // release every thread at once: > 4 calls in flight
+      val got = Await.result(Future.sequence(futures),
+        scala.concurrent.duration.Duration(120, "s")).flatten
+      assert(got === heights)
+      assert(low.blockServesIn(heights.head, heights.last) === heights.size)
+    } finally {
+      pool.shutdownNow()
+      conn.close()
+      low.stop()
+    }
   }
 
   /** Reflective handle on the private CAS parent slot — used ONLY to stage
@@ -337,190 +329,31 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("a stalled peer costs a pipelined batch ONE inactivity budget, not one per await") {
-    // regression (r10 ADVICE): each sequential await used to get a fresh
-    // full callTimeoutMillis, so a 20-deep batch against a stalled-but-open
-    // peer blocked the task thread ~20× the intended timeout before the T4
-    // retry saw an error. The batch issuer now refreshes the deadline only
-    // when a response COMPLETES (the inactivity budget — a progressing peer
-    // never starves); a fully stalled peer completes nothing, so the whole
-    // batch times out within ~one budget. A listener that accepts TCP but
-    // never speaks HTTP/2 is exactly that peer (the backlog completes the
-    // connect; no accept loop needed). 5 calls at 400 ms each: old =
-    // ~2000 ms serial budgets, new ≈ 400 ms; gate in between.
+  test("a stalled peer fails a unary call in ~one call timeout, leaving no stream open") {
+    // a listener that accepts TCP but never speaks HTTP/2 is a stalled-but-
+    // open peer (the backlog completes the connect; no accept loop needed):
+    // the call must surface IOException once its budget runs out — the T4
+    // retry's transient — and close its stream, or every retry would leave
+    // one more stream registered on the immortal pooled connection
     val silent = new java.net.ServerSocket(0, 16,
       java.net.InetAddress.getByName("127.0.0.1"))
     val conn = new GrpcConnection("127.0.0.1", silent.getLocalPort,
       callTimeoutMillis = 400)
     try {
       val req = graft.sources.grpc.TendermintGrpcCodec.encodeHeightRequest(2270371L)
-      val pending = (1 to 5).map(_ =>
-        conn.start(GrpcBlockClient.GetBlockByHeightPath, req))
-      val deadline = conn.deadlineFromNow()
       val t0 = System.nanoTime()
-      pending.foreach(p => intercept[java.io.IOException](p.await(deadline)))
+      intercept[java.io.IOException](conn.unary(GrpcBlockClient.GetBlockByHeightPath, req))
       val elapsedMs = (System.nanoTime() - t0) / 1000000L
-      assert(elapsedMs < 1300L,
-        s"5 awaits against a stalled peer took ${elapsedMs} ms — batch " +
-          "deadline not shared (serial budgets would be ~2000 ms)")
+      assert(elapsedMs >= 350L && elapsedMs < 1300L,
+        s"a 400 ms call budget against a stalled peer took $elapsedMs ms")
+      val h2 = conn.pooledChannel.pipeline()
+        .get(classOf[io.netty.handler.codec.http2.Http2FrameCodec]).connection()
+      // the stream close runs on the event loop: give it a moment to land
+      val deadline = System.nanoTime() + 5000L * 1000000L
+      while (h2.numActiveStreams() > 0 && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(h2.numActiveStreams() === 0, "the timed-out call left its stream registered")
     } finally { conn.close(); silent.close() }
-  }
-
-  test("callMany against a stalled peer fails within ~one inactivity budget end-to-end") {
-    // the callMany-LEVEL twin of the await-primitive test above: the whole
-    // pipelined meta path (dispatch 20, await under the refresh-on-
-    // completion inactivity budget with its absolute ceiling) must surface
-    // the stalled peer as IOException in ~one budget — reverting the
-    // refresh to per-await fresh budgets (the r10 bug) would take ~20×,
-    // and deleting the refresh line entirely is caught by the comment's
-    // progressing-peer rationale plus the ceiling bound pinned here.
-    // ?callTimeoutMillis routes the short budget through the real client
-    // and pool (first-dial-wins per endpoint; the port is unique).
-    val silent = new java.net.ServerSocket(0, 32,
-      java.net.InetAddress.getByName("127.0.0.1"))
-    try {
-      val c = new GrpcBlockClient(
-        s"grpc://127.0.0.1:${silent.getLocalPort}?callTimeoutMillis=400")
-      val t0 = System.nanoTime()
-      intercept[java.io.IOException](c.metaPages(2270370L, 2270389L))
-      val elapsedMs = (System.nanoTime() - t0) / 1000000L
-      assert(elapsedMs < 1600L,
-        s"a 20-deep stalled batch took ${elapsedMs} ms through callMany — " +
-          "per-await fresh budgets would be ~8000 ms")
-    } finally silent.close()
-  }
-
-  test("callTimeoutMillis is validated like results=: non-numeric and non-positive both name the URI") {
-    val bad = intercept[IllegalArgumentException](
-      new GrpcBlockClient("grpc://127.0.0.1:1?callTimeoutMillis=abc"))
-    assert(bad.getMessage.contains("callTimeoutMillis") &&
-      bad.getMessage.contains("grpc://127.0.0.1:1"))
-    val zero = intercept[IllegalArgumentException](
-      new GrpcBlockClient("grpc://127.0.0.1:1?callTimeoutMillis=0"))
-    assert(zero.getMessage.contains("> 0") &&
-      zero.getMessage.contains("grpc://127.0.0.1:1"))
-  }
-
-  test("a conflicting callTimeoutMillis for an already-dialed endpoint is flagged, once") {
-    // first-dial-wins is documented on the pool, but a silently ignored
-    // user-visible option is unreadable from the outside — the pool warns on
-    // a conflicting later dial, once per distinct conflict, not per RPC
-    val iso = new StubGrpcServer(T)
-    try {
-      val first = new GrpcBlockClient(iso.base) // dials at the 60 s default
-      assert(first.currentHeight() === 2270469L)
-      val n0 = GrpcBlockClient.timeoutConflicts
-      val second = new GrpcBlockClient(s"${iso.base}&callTimeoutMillis=123")
-      assert(second.currentHeight() === 2270469L) // still served (pool reused)
-      assert(GrpcBlockClient.timeoutConflicts === n0 + 1)
-      assert(second.currentHeight() === 2270469L)
-      assert(GrpcBlockClient.timeoutConflicts === n0 + 1,
-        "the same conflict must be flagged once, not once per RPC")
-    } finally iso.stop()
-    // the converse must NOT warn: a client that never set the option is not
-    // "requesting 60000" just because that is the default — against a pool
-    // first-dialed at an explicit non-default timeout, a defaulted later
-    // client is silence, not a conflict (r12 review)
-    val iso2 = new StubGrpcServer(T)
-    try {
-      val explicit = new GrpcBlockClient(s"${iso2.base}&callTimeoutMillis=123")
-      assert(explicit.currentHeight() === 2270469L)
-      val n1 = GrpcBlockClient.timeoutConflicts
-      val defaulted = new GrpcBlockClient(iso2.base) // no option named
-      assert(defaulted.currentHeight() === 2270469L)
-      assert(GrpcBlockClient.timeoutConflicts === n1,
-        "a defaulted client must not be warned about a timeout it never requested")
-    } finally iso2.stop()
-  }
-
-  test("ceiling-tripped batch shrinks the retry's pipeline depth: a slow-but-progressing peer drains") {
-    // regression (r11 ADVICE): the absolute batch ceiling reintroduced the
-    // fixed-whole-batch-budget failure mode for a LEGITIMATELY slow peer
-    // that serializes its responses — each response lands inside the
-    // inactivity budget, the batch total overruns the ceiling, and every T4
-    // retry re-issued the IDENTICAL full-depth batch against the same
-    // ceiling: permanently unfetchable despite constant progress. Now the
-    // trip halves the endpoint's pipeline depth, so the retry's chunks each
-    // fit under their own ceiling and the range drains; success re-grows
-    // the depth by ONE so one incident is not a permanent serial path.
-    // Additive, not doubling: a re-grow straight back to the tripped depth
-    // would make the NEXT page trip again — trip/drain oscillation, a full
-    // ceiling of abandoned peer work per cycle (r12 review).
-    // Numbers: budget 1800 ms, 500 ms per serialized response, 20-deep page
-    // → ceiling 9000 ms < 20×500 ms total, trips with the ceiling binding.
-    // The margins are deliberately wide for a wall-clock gate with exact
-    // depth asserts (r12 review flagged the original 800/400 pair as ~2×):
-    // a spurious inactivity timeout needs a >1.3 s scheduling excursion
-    // between two paced responses, and a chunk that should complete sits
-    // ≥3.5 s under its ceiling (10×500 ms vs 9000 ms).
-    val slow = new StubGrpcServer(T, delayBlockMillis = 500)
-    try {
-      val c = new GrpcBlockClient(s"${slow.base}&callTimeoutMillis=1800")
-      assert(c.currentHeight() === 2270469L) // settle SETTINGS (undelayed RPC)
-      assert(GrpcBlockClient.pipelineDepth("127.0.0.1", slow.port) ===
-        GrpcBlockClient.MaxBatchDepth)
-      intercept[java.io.IOException](c.metaPages(2270370L, 2270389L))
-      assert(GrpcBlockClient.pipelineDepth("127.0.0.1", slow.port) === 10,
-        "a ceiling trip must halve the effective (20-deep) pipeline depth")
-      Thread.sleep(2000L) // let the stub finish the abandoned serialized work
-      // the retry (T4 re-issues exactly this call) drains at depth 10:
-      // 10 × 500 ms per chunk sits well under the 9000 ms chunk ceiling
-      val pages = c.metaPages(2270370L, 2270389L)
-      assert(pages.size === 1)
-      val metas = mapper.readTree(pages.head).path("result").path("block_metas")
-      assert(metas.size() === 20)
-      assert(metas.get(0).path("header").path("height").asText() === "2270370")
-      assert(metas.get(19).path("header").path("height").asText() === "2270389")
-      assert(GrpcBlockClient.pipelineDepth("127.0.0.1", slow.port) === 11,
-        "a completed chunked batch must re-grow the depth by one (AIMD), " +
-          "not double back to the depth that just tripped")
-      // the anti-oscillation property itself: the NEXT page dispatches at 11
-      // (chunks of 11+9, each ≤5.5 s of serialized responses, well under the
-      // 9 s chunk ceiling) and succeeds — no second trip, depth climbs to 12
-      val again = c.metaPages(2270370L, 2270389L)
-      assert(mapper.readTree(again.head).path("result").path("block_metas").size() === 20)
-      assert(GrpcBlockClient.pipelineDepth("127.0.0.1", slow.port) === 12,
-        "the re-grown depth must not re-trip on the following page")
-    } finally slow.stop()
-  }
-
-  test("the depth AIMD is per-incident, not per-batch: a wave of trips shrinks once, a wave of completions regrows once") {
-    // r12 review: the pool is shared by every task on the executor, so ONE
-    // slow incident trips the ceiling in MANY concurrently in-flight
-    // batches — and an unconditional halve-per-tripped-batch would collapse
-    // 20→10→5→2→1 in one incident, leaving the endpoint fully serial, while
-    // an unconditional +1-per-completion would regrow +32 in one wave and
-    // overshoot straight past the depth that just tripped. Deterministic
-    // unit pin of the CAS semantics (a live concurrent twin would be a
-    // timing gate; the wire-level shrink/regrow cycle is pinned end-to-end
-    // by the test above).
-    val d = new java.util.concurrent.atomic.AtomicInteger(20)
-    // a wave of 4 tripped batches, all of which dispatched at depth 20:
-    // every sibling computes the same target (10), so the clamp is
-    // idempotent — once per incident, not once per batch
-    (1 to 4).foreach(_ => GrpcBlockClient.shrinkOnCeilingTrip(d, 20, 20))
-    assert(d.get() === 10,
-      "four trips of ONE incident must halve once, not collapse toward 1")
-    // a batch that dispatched at the ALREADY-shrunk depth and still tripped
-    // is a new incident at the new depth — a genuinely slower peer walks down
-    assert(GrpcBlockClient.shrinkOnCeilingTrip(d, 10, 10) === 5)
-    assert(d.get() === 5)
-    // a shrink must never be LOST to a racing regrow (the CAS-from-observed
-    // alternative lost exactly this): a completion regrows 5→6 an instant
-    // before a sibling dispatched at 5 trips — the trip's clamp still lands,
-    // so the T4 retry does not burn a second full-ceiling round un-shrunk
-    assert(GrpcBlockClient.regrowAfterChunkedBatch(d, 5))
-    assert(d.get() === 6)
-    assert(GrpcBlockClient.shrinkOnCeilingTrip(d, 5, 5) === 2)
-    // a wave of 4 chunked completions that all observed depth 2: +1 total,
-    // not +4 (overshoot would re-trip every other page)
-    val regrows = (1 to 4).map(_ => GrpcBlockClient.regrowAfterChunkedBatch(d, 2))
-    assert(d.get() === 3)
-    assert(regrows.count(identity) === 1)
-    // the floor: a trip at depth 1 stays at 1 (there the ceiling degenerates
-    // to 5× a single call's budget, which only a genuinely stalled peer misses)
-    val floor = new java.util.concurrent.atomic.AtomicInteger(1)
-    assert(GrpcBlockClient.shrinkOnCeilingTrip(floor, 1, 1) === 1)
   }
 
   test("request counters observe the wire (the gate queries' proof hooks)") {
