@@ -59,9 +59,10 @@ object ProtoWire {
       }
     }
 
-    /** Embedded message written even when empty (needed where the engine's
-      * JSON distinguishes `{}`-present from absent — not used by the current
-      * codec but kept for shape-completeness).
+    /** Embedded message written even when empty, where the engine's JSON
+      * distinguishes `{}`-present from absent — the gRPC codec writes every
+      * repeated message element (commit signatures, events, attributes, tx
+      * results, validator updates) this way.
       */
     def messageAlways(field: Int, nested: Writer): Writer = {
       val b = nested.bytes

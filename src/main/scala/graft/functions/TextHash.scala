@@ -200,13 +200,6 @@ object TextHash {
       s"THEN list_sum(list_transform(list_zip($a, $b), x -> x[1] * x[2])) " +
       s"ELSE NULL END"
 
-  /** Cosine similarity on quantized vectors: exact integer dot / sqrt norms.
-    * sqrt and division are correctly-rounded IEEE ops on identical integer
-    * inputs → identical doubles in any engine.
-    */
-  def cosQ(a: Column, b: Column): Column =
-    dotQ(a, b) / (sqrt(dotQ(a, a).cast("double")) * sqrt(dotQ(b, b).cast("double")))
-
   // === random-hyperplane LSH (sign-bucket ANN, Charikar '02) ==========
 
   /** Signed dot of a quantized vector with deterministic pseudo-random

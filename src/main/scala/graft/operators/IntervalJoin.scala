@@ -4,9 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed interval-overlap join — both sides are INTERVALS (contrast
-  * [[RangeJoin]], which joins points against windows). Spark plans the raw
-  * overlap predicate `aFrom <= bTo AND bFrom <= aTo` as a nested-loop join;
-  * this operator turns it into an equi-join by time banding:
+  * the band join [[graft.plans.BandJoinRewrite]] plans, which joins points
+  * against windows). Spark plans the raw overlap predicate
+  * `aFrom <= bTo AND bFrom <= aTo` as a nested-loop join; this operator
+  * turns it into an equi-join by time banding:
   *
   *   1. each interval explodes into the coarse time buckets it covers
   *      (`from div W .. to div W`);

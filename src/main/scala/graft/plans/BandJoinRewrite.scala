@@ -18,15 +18,19 @@ import org.apache.spark.sql.types._
   * O(|L| x |R|) comparisons — and keyed band joins degrade to quadratic work
   * inside each key group.
   *
-  * The rewrite applies the same quantization as [[graft.operators.RangeJoin]]
-  * (see its scaladoc for the correctness argument): bucket both times by
-  * `tol`, explode the smaller-output side to {b-1, b, b+1} via a Generate,
-  * add `bucket_l = bucket_r` to the join condition — now a plain equi-join
+  * The rewrite quantizes both times into buckets of width `tol`: any
+  * qualifying pair (|lt - rt| <= tol) lands in the same or an adjacent
+  * bucket, so it explodes the left side to {b-1, b, b+1} via a Generate and
+  * adds `bucket_l = bucket_r` to the join condition — now a plain equi-join
   * Catalyst plans as a shuffled/broadcast HASH join, with the original band
   * predicate retained as a residual filter. Each qualifying pair matches in
-  * exactly one bucket, so no dedup is needed and the join's row multiplicity
-  * (hence aggregates above it) is unchanged. A wrapping Project restores the
-  * original output, so the rewrite is invisible to everything above.
+  * exactly one bucket (the right row's bucket is exactly one of the left
+  * row's three), so no dedup is needed and the join's row multiplicity
+  * (hence aggregates above it) is unchanged; the cost is 3x|L| + |R|
+  * shuffled rows instead of the sum-of-squares of the key-group sizes. A
+  * wrapping Project restores the original output, so the rewrite is
+  * invisible to everything above. q7 (`q7_range_proximity`) is written
+  * this way.
   *
   * Scope: both band operands must be integral (bigint/int/...) — one
   *`unix_micros(ts)` away from timestamps. Double times would need an

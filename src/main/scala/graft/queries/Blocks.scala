@@ -20,6 +20,26 @@ object Blocks extends QueryPack {
   private val To = 2270469L
   private val MaxObj = "maximum_object_size=20000000, union_by_name=true"
 
+  /** Inline `VALUES` rows for an oracle DuckDB cannot compute (f4, f13):
+    * `golden` on the reference's golden corpus; on the committed chain, the
+    * rows of its `manifest.json` list `field` — `tools/fixture_chain.py`
+    * writes them and FixtureConsistencySpec checks them against
+    * `tools/wire_oracle.py`'s independent parse of the chain's files.
+    */
+  private def oracleRows(golden: String, field: String): String =
+    if (T == FixtureSource.ReferenceTemplates) golden
+    else {
+      import scala.jdk.CollectionConverters._
+      val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(s"$T/manifest.json"))
+      manifest.path(field).elements().asScala.map { row =>
+        row.elements().asScala.map { v =>
+          if (v.isTextual) "'" + v.asText().replace("'", "''") + "'"
+          else v.asText()
+        }.mkString("(", ", ", ")")
+      }.mkString(",\n        ")
+    }
+
   val s1Scan = GQuery(
     "s1_block_scan",
     (s, _) => EventTables.blocks(FixtureSource.blocksRaw(s, T, From, To))
@@ -183,7 +203,8 @@ object Blocks extends QueryPack {
     * table generated by `tools/wire_oracle.py` — an independent from-scratch
     * Python parse of the same fixture JSON (b64decode + hashlib.sha256),
     * sharing no code with BlockOps — so the driver hash-compares all 144
-    * digests; BlockCoreSpec additionally pins the 2270408/0 constant.
+    * digests; BlockCoreSpec additionally pins the 2270408/0 constant. On
+    * the committed chain the rows are its manifest's ([[oracleRows]]).
     */
   val f4TxHashes = GQuery(
     "f4_tx_hashes",
@@ -193,10 +214,14 @@ object Blocks extends QueryPack {
         col("height"),
         posexplode(BlockOps.txHashes(col("block.data.txs")))
           .as(Seq("tx_index", "tx_hash"))),
-    Some("""
+    Some(s"""
       SELECT CAST(height AS BIGINT) AS height,
              CAST(tx_index AS INT) AS tx_index, tx_hash
       FROM (VALUES
+        ${oracleRows(GoldenTxHashes, "tx_hashes")}) AS t(height, tx_index, tx_hash)"""))
+
+  /** f4's oracle rows on the golden corpus, from `tools/wire_oracle.py`. */
+  private lazy val GoldenTxHashes = """
         (2270408, 0, 'B2FB7800D823CF72AF3C6EAFF21ED61ED2D1709489F089EFB88D5A15F4E60E21'),
         (2270408, 1, '1B5FBFB19F1B1C33A4AFE01BA6A2B56191CF0157FC583CD1BC366D3F817DA9BB'),
         (2270408, 2, '740E6CE16FCD8336BDB649F4B08F824CA04A83BDF6260C5B2337254E5CE17EBE'),
@@ -340,7 +365,7 @@ object Blocks extends QueryPack {
         (2270465, 3, 'F71C70C197671D189461B429540FCB4E699D7FD139D17D537FF3C83F24A9CE68'),
         (2270466, 0, 'C6B1F4DCB7626BF4E96207878CFB92B02135385829061FB348139C42217751CD'),
         (2270468, 0, 'EBD4F06FCE207D72B83CCE73F5EC88D2DC68E927E0C9B2BBB98222CEF73386A4'),
-        (2270469, 0, '56E68014C3C196B67B5A3C628FC1BAD297120CF0A8964180FD77F08B26224D1B')) AS t(height, tx_index, tx_hash)"""))
+        (2270469, 0, '56E68014C3C196B67B5A3C628FC1BAD297120CF0A8964180FD77F08B26224D1B')"""
 
   /** P6/K3: console observer's every-nth sampling
     * (`ConsoleObserver.kt:41`) as a pure filter.
@@ -368,7 +393,8 @@ object Blocks extends QueryPack {
     * indices and /block for bytes. `total_fee` is BIGINT on both sides —
     * fees are integer nhash and the 75-tx oracle-domain total
     * (577,601,383,530 ≈ 5.8e11) is far inside int64, which sidesteps
-    * decimal-dtype hash ambiguity at the gate.
+    * decimal-dtype hash ambiguity at the gate. On the committed chain the
+    * row is its manifest's ([[oracleRows]]).
     */
   val f13Fees = GQuery(
     "f13_tx_fees_by_denom",
@@ -380,11 +406,12 @@ object Blocks extends QueryPack {
         sum(col("tx_meta.feeAmount").cast("decimal(38,0)"))
           .cast("long").as("total_fee"),
         count(lit(1)).as("n_txs")),
-    Some("""
+    Some(s"""
       SELECT denom, CAST(total_fee AS BIGINT) AS total_fee,
              CAST(n_txs AS BIGINT) AS n_txs
       FROM (VALUES
-        ('nhash', 577601383530, 75)) AS t(denom, total_fee, n_txs)"""))
+        ${oracleRows("('nhash', 577601383530, 75)", "fees_by_denom")})
+        AS t(denom, total_fee, n_txs)"""))
 
   // === the same semantics THROUGH the DSv2 connector ==================
   // These put the blockfeed connector's batch machinery — partition

@@ -191,13 +191,15 @@ object Relational extends QueryPack {
     },
     q6Asof.oracle)
 
-  /** Proximity join ([[graft.operators.RangeJoin]]): for every error event,
-    * how many clicks the same user made within ±5 minutes — bucketed band
-    * join (3x probe explode + hash equi-join on (key, bucket)) instead of
-    * the nested-loop plan Spark would pick for the raw band predicate.
-    * Left-outer shape (errors with zero clicks kept) via count + join-back —
-    * a shuffle join on the unique event_id (the count side scales with the
-    * error count, so it is NOT broadcast).
+  /** Proximity join: for every error event, how many clicks the same user
+    * made within ±5 minutes, written as the plain band predicate
+    * `abs(unix_micros(ts) - unix_micros(click_ts)) <= 5 min` next to the
+    * user key. The session's [[graft.plans.BandJoinRewrite]] plans it as a
+    * bucketed band join (3x probe explode + hash equi-join on (key,
+    * bucket)) instead of comparing every pair inside each user's key group.
+    * Left-outer shape (errors with zero clicks kept) via count + join-back
+    * — a shuffle join on the unique event_id (the count side scales with
+    * the error count, so it is NOT broadcast).
     */
   val q7Range = GQuery(
     "q7_range_proximity",
@@ -208,9 +210,9 @@ object Relational extends QueryPack {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
           col("ts").as("click_ts"))
-      val pairs = graft.operators.RangeJoin.within(
-        errors, clicks, Seq("user_id"), "ts", "click_ts",
-        toleranceMicros = 5L * 60 * 1000 * 1000)
+      val pairs = errors.as("e").join(clicks.as("c"),
+        col("e.user_id") === col("c.user_id") &&
+          abs(unix_micros(col("ts")) - unix_micros(col("click_ts"))) <= 300000000L)
       val counts = pairs.groupBy("event_id").agg(count(lit(1)).as("n_clicks_5m"))
       errors.join(counts, Seq("event_id"), "left")
         .select(col("event_id"), col("user_id"), col("ts"),

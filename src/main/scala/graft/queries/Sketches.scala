@@ -30,8 +30,11 @@ import org.apache.spark.sql.functions._
   * Merge laws (verified by SketchSpec on split-and-merge): bottom-k(A ∪ B) =
   * bottom-k(bottom-k(A) ∪ bottom-k(B)); CM(A ∪ B) = CM(A) + CM(B)
   * counter-wise; HLL(A ∪ B) = register-wise max. Each of sk1/sk2/sk3 also
-  * has a streaming face with the SAME arithmetic (StreamingKmv/StreamingCm/
-  * StreamingHll), so batch and stream answers are bit-comparable.
+  * has a streaming face that calls the functions below — [[u]] in
+  * StreamingKmv, [[cmCounters]] on a `readStream` frame, [[hllCells]] into
+  * StreamingHll and [[hllReadout]] out of st3 — so this object is the only
+  * definition of the sketch arithmetic and batch and stream answers are
+  * bit-comparable.
   */
 object Sketches extends QueryPack {
 
@@ -49,15 +52,14 @@ object Sketches extends QueryPack {
     * with zero collisions, wrecking the estimator). The HLL family
     * (sk3/sk6) therefore uses [[mix32]] instead.
     */
-  private def u(id: Column): Column = (id * 2654435761L) % 4294967296L
+  def u(id: Column): Column = (id * 2654435761L) % 4294967296L
   private def sqlU(id: String): String = s"($id * 2654435761) % 4294967296"
 
   /** Murmur-style 32-bit finalizer, expressed in portable integer ops
     * (multiply-mod-2^32 with multipliers < 2^31 so no product leaves
     * BIGINT for keys < 2^33; xor-shift via xor + integer division).
     * Applied as chained projections in Spark and chained CTEs in the
-    * oracle so neither engine duplicates subexpressions. Keep the three
-    * rounds in lock-step with [[graft.streaming.StreamingHll.mix32]].
+    * oracle so neither engine duplicates subexpressions.
     */
   private def mix32(df: DataFrame, key: Column): DataFrame = df
     .withColumn("ma", (key * 2654435761L) % 4294967296L)
@@ -165,6 +167,39 @@ object Sketches extends QueryPack {
   private def sqlCmHash(a: Long, b: Long, key: String): String =
     s"(($key * $a + $b) % 2147483647) % 256"
 
+  /** The d counter cells `key` increments: one generated (i, bucket) row
+    * per hash row.
+    */
+  private def cmBuckets(key: Column): Column =
+    posexplode(array(CmRows.map { case (a, b) => cmHash(a, b, key) }: _*))
+      .as(Seq("i", "bucket"))
+
+  /** sk2's counter relation (i, bucket, cnt) over the `key` column of `df`.
+    * Counters are plain additive counts, so the same function runs on a
+    * batch frame and on a `readStream` frame (update or complete mode, as
+    * `StreamingVolume.dailyCounts` does): any chunking or replay of the same
+    * rows yields the same counters, and counters from independent jobs merge
+    * by addition. State is d·w = 1024 rows at most, whatever the stream
+    * length or the key cardinality.
+    */
+  def cmCounters(df: DataFrame, key: String): DataFrame =
+    df.select(cmBuckets(col(key)))
+      .groupBy(col("i"), col("bucket"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** sk2's probe stage: for each (`key`, exact_n) probe row, the Count-Min
+    * estimate min_i cm[i][h_i(key)] against a counter relation from
+    * [[cmCounters]] — batch-built or a drained stream's — and its
+    * overcount over the exact count.
+    */
+  def cmProbe(cm: DataFrame, probes: DataFrame, key: String): DataFrame =
+    probes.select(col(key), col("exact_n"), cmBuckets(col(key)))
+      .join(broadcast(cm), Seq("i", "bucket"))
+      .groupBy(col(key), col("exact_n"))
+      .agg(min(col("cnt")).as("cm_est"))
+      .select(col(key), col("exact_n"), col("cm_est"),
+        (col("cm_est") - col("exact_n")).as("overcount"))
+
   /** Count-Min sketch over per-user event counts, probed for a fixed key
     * subset (user_id ≡ 13 mod 97): for each probe the estimate is
     * min_i counter[i][h_i(key)], which upper-bounds the true count with
@@ -186,23 +221,9 @@ object Sketches extends QueryPack {
     "sk2_countmin_probe",
     (s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"))
-      val hashed = ev.select(
-        posexplode(array(CmRows.map { case (a, b) =>
-          cmHash(a, b, col("user_id")) }: _*)).as(Seq("i", "bucket")))
-      val cm = hashed.groupBy(col("i"), col("bucket"))
-        .agg(count(lit(1)).as("cnt"))
       val probes = ev.filter(col("user_id") % 97 === 13)
         .groupBy(col("user_id")).agg(count(lit(1)).as("exact_n"))
-      val probeHashed = probes.select(
-        col("user_id"), col("exact_n"),
-        posexplode(array(CmRows.map { case (a, b) =>
-          cmHash(a, b, col("user_id")) }: _*)).as(Seq("i", "bucket")))
-      probeHashed
-        .join(broadcast(cm), Seq("i", "bucket"))
-        .groupBy(col("user_id"), col("exact_n"))
-        .agg(min(col("cnt")).as("cm_est"))
-        .select(col("user_id"), col("exact_n"), col("cm_est"),
-          (col("cm_est") - col("exact_n")).as("overcount"))
+      cmProbe(cmCounters(ev, "user_id"), probes, "user_id")
     },
     Some {
       val cmUnion = CmRows.zipWithIndex.map { case ((a, b), i) =>
@@ -239,7 +260,7 @@ object Sketches extends QueryPack {
     * between libm implementations. Priorities come from [[mix32]], not the
     * Knuth hash — see [[u]] for why structured keys break ρ statistics.
     */
-  private val HllM = 256L
+  private[graft] val HllM = 256L
 
   /** ρ over the 24-bit remainder (pri div 256 of a 32-bit priority):
     * leading-zero count + 1 ∈ [1, 24], 25 for remainder 0.
@@ -251,6 +272,50 @@ object Sketches extends QueryPack {
   private[queries] def sqlRho24(rest: String): String =
     (23 to 0 by -1).map(j => s"WHEN $rest >= ${1L << j} THEN ${24 - j}")
       .mkString("CASE ", " ", " ELSE 25 END")
+
+  /** One HLL cell per row of `df`: (`group`, reg, rho) — the [[mix32]]
+    * priority of the integral `id` split into its register index reg ∈
+    * [0, m) and the ρ of its 24-bit remainder. Registers are the max ρ per
+    * (group, reg), folded by a batch aggregate (sk3/sk6/sk9) or by
+    * StreamingHll's per-group state.
+    */
+  def hllCells(df: DataFrame, group: String, id: String): DataFrame =
+    mix32(df.select(col(group), col(id)), col(id))
+      .select(col(group), (col("pri") % HllM).as("reg"),
+        rho24Column(expr(s"pri div $HllM")).as("rho"))
+
+  /** Complete register rows (`group`, reg, rho) from [[hllCells]]: the max ρ
+    * per register, and every register 0..m−1 of each group present, ρ = 0
+    * for an empty one. The ≤ groups·m register relation is persisted and
+    * the spine's group list derived FROM it — the alternative (distinct
+    * over the data) costs a second full scan just to learn which groups
+    * exist.
+    */
+  private def hllRegisters(cells: DataFrame, group: String): DataFrame = {
+    val regs = cells.groupBy(col(group), col("reg"))
+      .agg(max(col("rho")).as("rho"))
+      .persist()
+    val spine = regs.select(col(group)).distinct()
+      .select(col(group), explode(sequence(lit(0L), lit(HllM - 1))).as("reg"))
+    spine.join(regs, Seq(group, "reg"), "left")
+      .withColumn("rho", coalesce(col("rho"), lit(0)))
+  }
+
+  /** The HLL readout per `keys` from COMPLETE register rows (keys, reg,
+    * rho): `int_sum` = Σ 2^(25−ρ) (the harmonic denominator kept as an
+    * exact integer), `n_zero_registers`, and `est_hll` = α·m²/Σ2^(−ρ) as one
+    * integer division.
+    */
+  def hllReadout(regs: DataFrame, keys: String*): DataFrame =
+    regs.groupBy(keys.map(col): _*)
+      .agg(
+        sum(expr("shiftleft(1L, 25 - rho)")).as("int_sum"),
+        sum(when(col("rho") === 0, 1L).otherwise(0L)).as("n_zero_registers"))
+      // 1579496831811846144 = 718272 · 2^16 · 2^25 (α_micro · m² · 2^25),
+      // precomputed so neither engine multiplies int literals (Spark's
+      // non-ANSI INT product would wrap silently; DuckDB's would error)
+      .withColumn("est_hll",
+        expr("1579496831811846144L div int_sum div 1000000"))
 
   /** Distinct users per event type, estimated from HLL registers and
     * reported next to the exact count. The harmonic denominator
@@ -275,33 +340,11 @@ object Sketches extends QueryPack {
   val hllDistinct = GQuery(
     "sk3_hll_distinct",
     (s, dir) => {
-      val ev = mix32(
-          t(s, dir, "events").select(col("event_type"), col("user_id")),
-          col("user_id"))
-        .withColumn("reg", col("pri") % HllM)
-        .withColumn("rest", expr(s"pri div $HllM"))
-      // persist the ≤ groups·m register relation and derive the spine's
-      // group list FROM it — the alternative (distinct over the data) cost
-      // a second full scan just to learn which groups exist
-      val regs = ev.groupBy(col("event_type"), col("reg"))
-        .agg(max(rho24Column(col("rest"))).as("rho"))
-        .persist()
-      val spine = regs.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          explode(sequence(lit(0L), lit(HllM - 1))).as("reg"))
-      val full = spine.join(regs, Seq("event_type", "reg"), "left")
-        .withColumn("rho", coalesce(col("rho"), lit(0)))
+      val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       val exact = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_distinct"))
-      full.groupBy(col("event_type"))
-        .agg(
-          sum(expr("shiftleft(1L, 25 - rho)")).as("int_sum"),
-          sum(when(col("rho") === 0, 1L).otherwise(0L)).as("n_zero_registers"))
-        // 1579496831811846144 = 718272 · 2^16 · 2^25 (α_micro · m² · 2^25),
-        // precomputed so neither engine multiplies int literals (Spark's
-        // non-ANSI INT product would wrap silently; DuckDB's would error)
-        .withColumn("est_hll",
-          expr("1579496831811846144L div int_sum div 1000000"))
+      hllReadout(hllRegisters(hllCells(ev, "event_type", "user_id"),
+          "event_type"), "event_type")
         .join(exact, "event_type")
         .select(col("event_type"), col("int_sum"), col("n_zero_registers"),
           col("est_hll"), col("exact_distinct"))
@@ -542,12 +585,9 @@ object Sketches extends QueryPack {
         struct(lit(c).as("column_name"),
           expr(s"CAST(round($c * 100) AS BIGINT)").as("key"))): _*)).as("p"))
         .select(col("p.column_name").as("column_name"), col("p.key").as("key"))
-      val pairs = mix32(keyed, col("key"))
-        .select(col("column_name"),
-          (col("pri") % HllM).as("reg"),
-          expr(s"pri div $HllM").as("rest"))
-      val regs = pairs.groupBy(col("column_name"), col("reg"))
-        .agg(max(rho24Column(col("rest"))).as("rho"))
+      val regs = hllCells(keyed, "column_name", "key")
+        .groupBy(col("column_name"), col("reg"))
+        .agg(max(col("rho")).as("rho"))
       // the spine is a compile-time constant (8 names × 256 registers) —
       // derive it from a literal, never by re-scanning the table
       val spine = s.range(1)
@@ -556,16 +596,9 @@ object Sketches extends QueryPack {
           explode(sequence(lit(0L), lit(HllM - 1))).as("reg"))
       val filled = spine.join(regs, Seq("column_name", "reg"), "left")
         .withColumn("rho", coalesce(col("rho"), lit(0)))
-      filled.groupBy(col("column_name"))
-        .agg(
-          sum(expr("shiftleft(1L, 25 - rho)")).as("int_sum"),
-          sum(when(col("rho") === 0, 1L).otherwise(0L)).as("n_zero_registers"))
-        // 1579496831811846144 = 718272 · 2^16 · 2^25 (α_micro · m² · 2^25 —
-        // the 24-bit-remainder analogue of sk3's constant)
-        .withColumn("est_distinct",
-          expr("1579496831811846144L div int_sum div 1000000"))
+      hllReadout(filled, "column_name")
         .select(col("column_name"), col("int_sum"),
-          col("n_zero_registers"), col("est_distinct"))
+          col("n_zero_registers"), col("est_hll").as("est_distinct"))
     },
     Some {
       val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
@@ -759,32 +792,20 @@ object Sketches extends QueryPack {
   val hllSetAlgebra = GQuery(
     "sk9_hll_set_algebra",
     (s, dir) => {
-      val ev = mix32(
-          t(s, dir, "events").select(col("event_type"), col("user_id")),
-          col("user_id"))
-        .withColumn("reg", col("pri") % HllM)
-        .withColumn("rest", expr(s"pri div $HllM"))
-      val regs = ev.groupBy(col("event_type"), col("reg"))
-        .agg(max(rho24Column(col("rest"))).as("rho"))
-      val spine = regs.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          explode(sequence(lit(0L), lit(HllM - 1))).as("reg"))
-      val filled = spine.join(regs, Seq("event_type", "reg"), "left")
-        .withColumn("rho", coalesce(col("rho"), lit(0)))
+      val filled = hllRegisters(hllCells(
+          t(s, dir, "events"), "event_type", "user_id"), "event_type")
         .persist()
-      val perType = filled.groupBy(col("event_type"))
-        .agg(sum(expr("shiftleft(1L, 25 - rho)")).as("int_sum"))
-        .withColumn("est", expr("1579496831811846144L div int_sum div 1000000"))
+      val perType = hllReadout(filled, "event_type")
+        .select(col("event_type"), col("est_hll").as("est"))
       val pairRegs = filled.select(col("event_type").as("ta"),
           col("reg"), col("rho").as("ra"))
         .join(filled.select(col("event_type").as("tb"),
           col("reg"), col("rho").as("rb")), Seq("reg"))
         .filter(col("ta") < col("tb"))
-      val unionEst = pairRegs
-        .groupBy(col("ta"), col("tb"))
-        .agg(sum(expr("shiftleft(1L, 25 - greatest(ra, rb))")).as("int_sum_u"))
-        .withColumn("est_union",
-          expr("1579496831811846144L div int_sum_u div 1000000"))
+        .select(col("ta"), col("tb"), col("reg"),
+          greatest(col("ra"), col("rb")).as("rho"))
+      val unionEst = hllReadout(pairRegs, "ta", "tb")
+        .select(col("ta"), col("tb"), col("est_hll").as("est_union"))
       val du = t(s, dir, "events")
         .select(col("event_type"), col("user_id")).distinct().persist()
       val exact = du.select(col("event_type").as("ta"), col("user_id"))

@@ -157,8 +157,9 @@ object StreamGate extends QueryPack {
 
   /** st3: sk3's HyperLogLog registers maintained by the LIVE path —
     * `StreamingHll`'s flatMapGroupsWithState (256 bytes of state per
-    * group) over the streamed events, latest snapshot per group selected
-    * from the append stream. Oracle: sk3's own register/estimate SQL
+    * group) over sk3's cells of the streamed events; each group's latest
+    * snapshot is selected from the append stream and its registers go
+    * through sk3's own readout. Oracle: sk3's own register/estimate SQL
     * (the shared mix32/ρ fragments, reduced to the sketch columns) —
     * valid because register max is commutative AND idempotent, so the
     * drained registers are a pure function of the row SET.
@@ -172,14 +173,11 @@ object StreamGate extends QueryPack {
         .as[graft.streaming.StreamingHll.HllOcc]
       val snaps = drain(s, graft.streaming.StreamingHll(occs).toDF(),
         "st3_snaps", mode = "append")
-      snaps
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("group")).orderBy(col("tick").desc)))
-        .filter(col("rk") === 1)
-        .select(col("group").as("event_type"), col("intSum").as("int_sum"),
-          col("nZeroRegisters").as("n_zero_registers"),
-          col("estHll").as("est_hll"))
+      val regs = snaps
+        .groupBy(col("group").as("event_type"))
+        .agg(max_by(col("regs"), col("tick")).as("regs"))
+        .select(col("event_type"), posexplode(col("regs")).as(Seq("reg", "rho")))
+      Sketches.hllReadout(regs, "event_type")
     },
     Some(s"""
       WITH ${Sketches.sqlMix32("events", "event_type, user_id", "user_id")},

@@ -24,9 +24,7 @@ import scala.jdk.CollectionConverters._
   *   - height-range filter pushdown  → partition pruning (§4)
   *     (pruning/pushdown reach BATCH scans only: Spark's DSv2 streaming
   *     path builds the scan without pushFilters/pruneColumns calls, so a
-  *     streaming query always runs mode=full — use the `fetchResults`
-  *     option to elide the per-height results RPC on streams that never
-  *     read the event columns)
+  *     streaming query always runs mode=full and fetches results)
   *   - `maxHeightsPerTrigger`        → T6 admission control (the 10k live
   *     buffer, `MultiplexFlow.kt:74`)
   *
@@ -41,15 +39,7 @@ import scala.jdk.CollectionConverters._
   * endpoint — the stream's tip then comes from pushed `NewBlock` events via
   * [[WsSubscription]] instead of per-trigger polling; block data still
   * flows through the partitioned RPC readers, the reference's
-  * `WsBlockDataFlow.kt:48` subscribe-then-fetch split),
-  * `fetchResults` (default true; false skips the per-height
-  * `/block_results` RPC entirely — event columns come back null, the same
-  * documented degrade as a node that does not serve results. The option
-  * exists for STREAMING queries, which Spark never prunes; the BATCH path
-  * ignores it — there column pruning is authoritative, eliding the RPC
-  * exactly when no event column is projected and fetching it when one is,
-  * so a conflicting fetchResults=false can never null out columns a batch
-  * query explicitly asked for).
+  * `WsBlockDataFlow.kt:48` subscribe-then-fetch split).
   */
 class BlockFeedProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "blockfeed"
@@ -155,10 +145,6 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
   private val heightsPerPartition =
     options.getInt("heightsPerPartition", 128)
 
-  // fetchResults is deliberately NOT read here: the batch factory hardcodes
-  // true (projection is authoritative — see toBatch), and the streaming
-  // path re-reads the option inside BlockFeedMicroBatch
-
   override def readSchema(): StructType = required
   override def description(): String =
     s"blockfeed(path=$path, mode=${if (metaMode) "meta" else "full"}, " +
@@ -196,16 +182,8 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
         .toArray[InputPartition]
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      // the PROJECTION is authoritative in batch: pruneColumns reached this
-      // scan, so the reader's needResults guard (pruned ordinal >= 7)
-      // already elides the results RPC exactly when no event column is
-      // read. Honoring fetchResults=false here as well would hand a batch
-      // query that explicitly projects txs_results/begin/end_block_events
-      // silently-null event columns — the option is a STREAMING opt-out
-      // (Spark's DSv2 streaming path never prunes), documented as ignored
-      // on the batch path.
       new BlockFeedReaderFactory(path, prunedOrdinals, minNumTxs,
-        retryBaseWaitMs, fetchResults = true)
+        retryBaseWaitMs)
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -362,8 +340,7 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BlockFeedReaderFactory(path, prunedOrdinals, minNumTxs, retryBaseWaitMs,
-      options.getBoolean("fetchResults", true))
+    new BlockFeedReaderFactory(path, prunedOrdinals, minNumTxs, retryBaseWaitMs)
 
   override def deserializeOffset(json: String): Offset = HeightOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
@@ -371,8 +348,7 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
 }
 
 class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
-                             minNumTxs: Int, retryBaseWaitMs: Long = 1000L,
-                             fetchResults: Boolean = true)
+                             minNumTxs: Int, retryBaseWaitMs: Long = 1000L)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
     val p = partition.asInstanceOf[HeightRangePartition]
@@ -381,7 +357,7 @@ class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
     new BlockFeedPartitionReader(
       new RetryingBlockClient(BlockClient.open(path),
         baseWaitMillis = retryBaseWaitMs), p, prunedOrdinals, minNumTxs,
-      retryBaseWaitMs, fetchResults)
+      retryBaseWaitMs)
   }
 }
 
@@ -394,8 +370,7 @@ class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
   */
 class BlockFeedPartitionReader(client: BlockClient, p: HeightRangePartition,
                                prunedOrdinals: Array[Int], minNumTxs: Int,
-                               retryBaseWaitMs: Long = 1000L,
-                               fetchResults: Boolean = true)
+                               retryBaseWaitMs: Long = 1000L)
   extends PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
 
   private val codec = new RowCodec
@@ -503,9 +478,8 @@ class BlockFeedPartitionReader(client: BlockClient, p: HeightRangePartition,
       // column (raw ordinals 7..9) is projected, the per-height fetch is ONE
       // RPC instead of the reference's fixed two (`TendermintBlockFetcher
       // .kt:36`) — column pruning reaching past the scan into the wire calls.
-      // Streaming never receives pruning (Spark DSv2), so fetchResults=false
-      // is the explicit opt-out there.
-      val needResults = fetchResults && prunedOrdinals.exists(_ >= 7)
+      // Streaming never receives pruning (Spark DSv2), so streams fetch both.
+      val needResults = prunedOrdinals.exists(_ >= 7)
       p.heights.iterator.flatMap(h => plannedRow(h, needResults))
     }
 

@@ -87,13 +87,4 @@ object DecodeCascade {
 
     Unknown(input)
   }
-
-  /** Stream-side policy: data frames pass, Panic throws, noise drops. */
-  def filterData(frames: Iterator[String]): Iterator[MessageType] =
-    frames.map(classify).flatMap {
-      case e: RpcError if e.isPanic => throw new PanicException(e)
-      case nb: NewBlock => Some(nb)
-      case nh: NewBlockHeader => Some(nh)
-      case _ => None // Error / Empty / Unknown dropped (reference logs + drops)
-    }
 }

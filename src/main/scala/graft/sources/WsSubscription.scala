@@ -20,8 +20,9 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
   * semantics), `Error`/`Empty`/`Unknown` drop with counters, and a
   * malformed frame tears the connection down for a resubscribe — the
   * reference's `DecoderEncodingException` → flow-restart path. Reconnects
-  * use the reference backoff shape (base·2^attempt, `utils/Backoff.kt:30`)
-  * and re-send the subscribe request each time.
+  * wait the connector's one backoff ([[Backoff]]: base·2^attempt ± 25%
+  * jitter, `utils/Backoff.kt:30`) and re-send the subscribe request each
+  * time.
   *
   * Transport is JDK `java.net.http.WebSocket` — no extra dependency.
   */
@@ -117,8 +118,8 @@ final class WsSubscription(
             failure.compareAndSet(null, new java.io.IOException(
               s"websocket $url unreachable after $attempt attempts", e))
           } else {
-            val wait = reconnectBaseMillis * (1L << math.min(attempt - 1, 6))
-            try Thread.sleep(wait) catch { case _: InterruptedException => }
+            try Thread.sleep(Backoff.waitMillis(reconnectBaseMillis, attempt - 1))
+            catch { case _: InterruptedException => }
           }
       }
     }

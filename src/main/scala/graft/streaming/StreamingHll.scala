@@ -1,32 +1,36 @@
 package graft.streaming
 
+import graft.queries.Sketches
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Online distinct-count over an unbounded stream: the sk3 HyperLogLog
   * registers (queries/Sketches.scala) maintained as `flatMapGroupsWithState`
-  * state — the streaming face of the same sketch, sharing hash, register
-  * split, and estimate arithmetic so streamed registers are BIT-IDENTICAL to
-  * a batch sk3 run over the same rows (StreamingHllSpec pins this).
+  * state. The operator consumes sk3's own per-row cells
+  * ([[Sketches.hllCells]]: register index and ρ) and emits its registers,
+  * which st3 reads out with sk3's [[Sketches.hllReadout]] — so streamed
+  * registers are BIT-IDENTICAL to a batch sk3 run over the same rows
+  * (StreamingHllSpec pins this) with no second copy of the hash or the
+  * estimate.
   *
   * Scale shape: state is exactly m = 256 bytes per group key — constant in
   * stream length AND in key cardinality of the counted column (contrast
   * `dropDuplicates().groupBy().count()`, whose streaming state grows with
-  * every distinct key forever and needs watermark eviction to survive).
+  * every distinct key forever and needs watermark eviction to survive; a
+  * built-in `groupBy(group, reg).max` would hold m state rows per group).
   * Register update is a pointwise MAX — commutative and idempotent — so
   * unlike SpaceSaving (HeavyHitters) no per-batch pre-aggregation or sorted
   * replay is needed for determinism: any arrival order, chunking, replay,
   * or speculative re-execution produces the same registers. That also makes
   * the state a CRDT: registers from independent shards/jobs merge by max,
   * which is the cross-datacenter / backfill-union story.
-  *
-  * The estimate is the sk3 integer form: Σ 2^(27−ρ) kept exact in a Long,
-  * est = α·m²·2^27 div sum div 10^6 — no float accumulation, so snapshots
-  * hash-compare against the batch oracle-checked query.
   */
 object StreamingHll {
 
   final case class HllOcc(group: String, id: Long)
+
+  /** One row's [[Sketches.hllCells]] cell. */
+  final case class HllCell(group: String, reg: Long, rho: Int)
 
   /** m = 256 registers, one byte each; `n` counts absorbed rows (not
     * distincts) for observability; `tick` numbers snapshots so consumers
@@ -34,48 +38,12 @@ object StreamingHll {
     */
   final case class HllState(tick: Long, n: Long, regs: Array[Byte])
 
-  final case class HllSnapshot(
-      group: String, tick: Long, n: Long,
-      intSum: Long, nZeroRegisters: Long, estHll: Long)
-
-  private val M = 256
-
-  /** The sk3 avalanche priority — keep the rounds in lock-step with
-    * queries/Sketches.scala `mix32` (a Murmur-style 32-bit finalizer; the
-    * plain Knuth hash is low-discrepancy on sequential ids, which wrecks
-    * the leading-zero statistics ρ depends on).
+  /** `regs(j)` is register j's ρ (0 = empty): posexploded, the complete
+    * (reg, rho) rows [[Sketches.hllReadout]] takes.
     */
-  def mix32(k: Long): Long = {
-    val a = (k * 2654435761L) % 4294967296L
-    val b = a ^ (a / 65536L)
-    val c = (b * 1540483477L) % 4294967296L
-    val d = c ^ (c / 8192L)
-    val e = (d * 1274126177L) % 4294967296L
-    e ^ (e / 65536L)
-  }
+  final case class HllSnapshot(group: String, tick: Long, n: Long, regs: Seq[Int])
 
-  def register(id: Long): Int = (mix32(id) % M).toInt
-
-  /** ρ ∈ [1, 25]: leading-zero rank of the 24-bit remainder (25 for 0) —
-    * the integer-CASE semantics of the batch query, as plain Scala.
-    */
-  def rho(id: Long): Int = {
-    val rest = mix32(id) / M
-    if (rest == 0) 25 else 24 - (63 - java.lang.Long.numberOfLeadingZeros(rest))
-  }
-
-  def estimate(regs: Array[Byte]): (Long, Long, Long) = {
-    var intSum = 0L
-    var zeros = 0L
-    var j = 0
-    while (j < M) {
-      intSum += 1L << (25 - regs(j))
-      if (regs(j) == 0) zeros += 1
-      j += 1
-    }
-    // 1579496831811846144 = α_micro · m² · 2^25, the sk3 constant
-    (intSum, zeros, 1579496831811846144L / intSum / 1000000L)
-  }
+  private val M = Sketches.HllM.toInt
 
   /** Absorb a micro-batch into the group's registers and append one
     * snapshot. Max is commutative+idempotent, so iterator order is
@@ -83,27 +51,26 @@ object StreamingHll {
     */
   def updateGroup(
       group: String,
-      rows: Iterator[HllOcc],
+      cells: Iterator[HllCell],
       state: GroupState[HllState]): Iterator[HllSnapshot] = {
     val st = state.getOption.getOrElse(HllState(0L, 0L, new Array[Byte](M)))
     val regs = st.regs.clone()
     var n = st.n
-    rows.foreach { occ =>
-      val r = register(occ.id)
-      val v = rho(occ.id)
-      if (v > regs(r)) regs(r) = v.toByte
+    cells.foreach { c =>
+      val r = c.reg.toInt
+      if (c.rho > regs(r)) regs(r) = c.rho.toByte
       n += 1
     }
     val next = HllState(st.tick + 1, n, regs)
     state.update(next)
-    val (intSum, zeros, est) = estimate(regs)
-    Iterator(HllSnapshot(group, next.tick, n, intSum, zeros, est))
+    Iterator(HllSnapshot(group, next.tick, n, regs.map(_.toInt).toSeq))
   }
 
   def apply(occs: Dataset[HllOcc]): Dataset[HllSnapshot] = {
     import occs.sparkSession.implicits._
     implicit val stateEnc: Encoder[HllState] = Encoders.product[HllState]
-    occs.groupByKey(_.group)
+    Sketches.hllCells(occs.toDF(), "group", "id").as[HllCell]
+      .groupByKey(_.group)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout)(updateGroup)
   }

@@ -1,6 +1,8 @@
 package graft.streaming
 
+import graft.queries.Sketches
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Online quantile estimation over an unbounded stream: the sk1 KMV
@@ -18,9 +20,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * concatenate-then-truncate (the sk1 merge law). No watermark is needed
   * for correctness — the sample only refines.
   *
-  * Estimates are values FROM the sample selected by integer rank
-  * arithmetic (`(p·n + 99) div 100`), the sk1 rule — no interpolation, no
-  * float accumulation.
+  * Priorities are sk1's own Knuth hash ([[Sketches.u]]), computed as a
+  * column before the state update. Estimates are values FROM the sample
+  * selected by integer rank arithmetic (`(p·n + 99) div 100`), the sk1
+  * rule — no interpolation, no float accumulation. The rule runs here, not
+  * in a readout over the drained state, because the operator emits per
+  * tick.
   */
 object StreamingKmv {
 
@@ -40,9 +45,6 @@ object StreamingKmv {
   val K = 512
   val Pcts: Seq[Int] = Seq(50, 90, 99)
 
-  /** The sk1 Knuth priority — keep in lock-step with Sketches.u. */
-  def priority(id: Long): Long = (id * 2654435761L) % 4294967296L
-
   /** Bottom-k by (priority, id) — the id tiebreak makes selection total. */
   private def truncate(entries: Seq[KmvEntry]): Seq[KmvEntry] =
     entries.distinct.sortBy(e => (e.pri, e.id)).take(K)
@@ -61,14 +63,11 @@ object StreamingKmv {
 
   def updateGroup(
       group: String,
-      rows: Iterator[KmvOcc],
+      rows: Iterator[(String, KmvEntry)],
       state: GroupState[KmvState]): Iterator[KmvSnapshot] = {
     val st = state.getOption.getOrElse(KmvState(0L, 0L, Seq.empty))
-    var n = st.n
-    val incoming = rows.map { o =>
-      n += 1
-      KmvEntry(priority(o.id), o.id, o.value)
-    }.toSeq
+    val incoming = rows.map(_._2).toSeq
+    val n = st.n + incoming.length
     val next = KmvState(st.tick + 1, n, truncate(st.sample ++ incoming))
     state.update(next)
     quantiles(next.sample).iterator.map { case (p, ns, v) =>
@@ -79,7 +78,10 @@ object StreamingKmv {
   def apply(occs: Dataset[KmvOcc]): Dataset[KmvSnapshot] = {
     import occs.sparkSession.implicits._
     implicit val stateEnc: Encoder[KmvState] = Encoders.product[KmvState]
-    occs.groupByKey(_.group)
+    occs.select(col("group"),
+        struct(Sketches.u(col("id")).as("pri"), col("id"), col("value")))
+      .as[(String, KmvEntry)]
+      .groupByKey(_._1)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout)(updateGroup)
   }

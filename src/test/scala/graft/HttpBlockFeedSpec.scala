@@ -257,57 +257,4 @@ class HttpBlockFeedSpec extends AnyFunSuite {
         s"expected per-run pages, saw ${stub.requestCount - before} RPCs")
     }
   }
-
-  test("fetchResults=false elides the results RPC on streams (Spark never prunes streaming scans)") {
-    // Spark's DSv2 streaming path builds the scan without pruneColumns /
-    // pushFilters, so a stream always runs mode=full and pays the results
-    // RPC even when no event column is ever read. fetchResults=false is the
-    // explicit opt-out: event columns degrade to null (the documented
-    // left-join parity), and the wire sees exactly zero /block_results.
-    // per-endpoint counter, NOT a total-request delta: an exact delta
-    // couples the assertion to both drains issuing byte-identical
-    // planning-RPC sequences (an AQE-style re-plan already broke one such
-    // exact count in the sparse-heights test)
-    def drainResultsServes(fetchResults: Boolean, name: String): Int = withStub { stub =>
-      val q = spark.readStream.format("blockfeed")
-        .option("path", stub.base)
-        .option("from", "2270370").option("to", "2270389")
-        .option("fetchResults", fetchResults.toString)
-        .load()
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      val got = spark.table(name)
-      assert(got.count() === 20L)
-      if (!fetchResults)
-        assert(got.filter(col("begin_block_events").isNotNull).count() === 0L,
-          "event columns must degrade to null, not go missing or stale")
-      else
-        assert(got.filter(col("begin_block_events").isNotNull).count() > 0L)
-      stub.resultsServes
-    }
-    assert(drainResultsServes(fetchResults = true, "bf_http_res_on") === 20,
-      "the full-mode drain must pay one /block_results RPC per height")
-    assert(drainResultsServes(fetchResults = false, "bf_http_res_off") === 0,
-      "the elided drain must issue ZERO /block_results RPCs")
-  }
-
-  test("batch ignores fetchResults=false when event columns are projected") {
-    // the option is a STREAMING opt-out (Spark's DSv2 streaming path never
-    // prunes); in batch the projection is authoritative — honoring a
-    // conflicting fetchResults=false would hand a query that explicitly
-    // asked for begin_block_events silently-null columns
-    withStub { stub =>
-      val df = spark.read.format("blockfeed")
-        .option("path", stub.base)
-        .option("from", "2270370").option("to", "2270389")
-        .option("fetchResults", "false")
-        .load()
-        .select("height", "begin_block_events")
-      assert(df.filter(col("begin_block_events").isNotNull).count() > 0L,
-        "projection must win over fetchResults=false on the batch path")
-      assert(stub.resultsServes === 20,
-        "all 20 planned heights must pay their results RPC despite the option")
-    }
-  }
 }

@@ -45,6 +45,9 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q7_range_proximity")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"band predicate fell back to a nested loop:\n$p")
+    // the band predicate is bucketed by BandJoinRewrite, not left as a
+    // residual over the whole user-key group
+    assert(p.contains("__band_bucket"), s"band join not rewritten:\n$p")
   }
 
   test("q6b: the as-of join runs on the dedicated physical operator") {

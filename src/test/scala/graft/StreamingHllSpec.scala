@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming HLL: 256 bytes of state per group, snapshots bit-identical to
-  * the batch sk3 query over the same rows, chunking-invariant (max is
+/** Streaming HLL: 256 bytes of state per group, snapshot registers read
+  * out by sk3's [[graft.queries.Sketches.hllReadout]] bit-identical to the
+  * batch sk3 query over the same rows, chunking-invariant (max is
   * commutative+idempotent).
   */
 class StreamingHllSpec extends AnyFunSuite {
@@ -42,6 +43,18 @@ class StreamingHllSpec extends AnyFunSuite {
     }
   }
 
+  /** sk3's readout of each group's final snapshot registers. */
+  private def readout(snaps: Map[String, HllSnapshot]): Map[String, (Long, Long, Long)] = {
+    import spark.implicits._
+    val regs = snaps.values.toSeq.toDS()
+      .select(col("group"), posexplode(col("regs")).as(Seq("reg", "rho")))
+    graft.queries.Sketches.hllReadout(regs, "group")
+      .select("group", "int_sum", "n_zero_registers", "est_hll")
+      .collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+  }
+
   test("streamed registers reproduce the batch sk3 estimate bit-for-bit") {
     val batch = graft.queries.Sketches.hllDistinct.run(spark, dir)
       .select("event_type", "int_sum", "n_zero_registers", "est_hll")
@@ -49,10 +62,11 @@ class StreamingHllSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     val streamed = run(occs(), chunks = 7, name = "shll_vs_batch")
-    assert(streamed.keySet == batch.keySet)
-    streamed.foreach { case (g, s) =>
-      assert((s.intSum, s.nZeroRegisters, s.estHll) == batch(g),
-        s"group $g: streamed (${s.intSum},${s.nZeroRegisters},${s.estHll}) vs batch ${batch(g)}")
+    assert(streamed.values.forall(_.regs.length == 256))
+    val est = readout(streamed)
+    assert(est.keySet == batch.keySet)
+    est.foreach { case (g, e) =>
+      assert(e == batch(g), s"group $g: streamed $e vs batch ${batch(g)}")
     }
   }
 
@@ -63,7 +77,7 @@ class StreamingHllSpec extends AnyFunSuite {
     assert(one.keySet == many.keySet)
     one.foreach { case (g, s) =>
       val m = many(g)
-      assert((s.intSum, s.nZeroRegisters, s.estHll) == (m.intSum, m.nZeroRegisters, m.estHll))
+      assert(s.regs == m.regs, s"group $g: registers differ between chunkings")
       assert(s.n == m.n && s.n == data.count(_.group == g))
     }
   }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Stream-stream joins (Structured Streaming's stateful two-input operator):
   * watermarked interval inner join and the left-outer variant that emits
   * null-padded rows once the watermark passes the join window. The
-  * batch-side counterpart is [[graft.operators.AsofJoin]]/[[graft.operators.RangeJoin]];
+  * batch-side counterpart is [[graft.operators.AsofJoin]] / q7's band join
+  * ([[graft.plans.BandJoinRewrite]]);
   * this is the live path for the same attribution shape: state on both sides
   * is bounded by the watermark + time-range condition, so it runs forever on
   * unbounded feeds without unbounded state.
