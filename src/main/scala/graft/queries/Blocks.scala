@@ -748,24 +748,25 @@ object Blocks extends QueryPack {
     },
     e1Connector.oracle)
 
-  /** st13: the CometBFT ≥0.38 block-results layout over the gRPC wire —
-    * the layout a REAL node's BlockResultsService serves (the service only
-    * exists from 0.38 on; the v034 layout of st11/st12 is the fixtures'
-    * own split shape). The stub folds the corpus' begin/end lists into one
+  /** st13: the begin/end split of the CometBFT ≥0.38 block-results layout
+    * over the gRPC wire — the only layout a real node's BlockResultsService
+    * serves (the service exists from 0.38 on), and the one every gRPC gate
+    * (st11–st15) reads. The stub folds the corpus' begin/end lists into one
     * `finalize_block_events` list with the cosmos-sdk's `mode` markers and
     * adds the `validator_updates`/`app_hash` fields the engine never reads;
     * the client must reconstruct the 0.34 split from the markers, STRIP
     * them, and skip the unknown fields
-    * ([[graft.sources.grpc.TendermintGrpcCodec]]'s v038 scaladoc carries
-    * the routing rules). The gate is a per-(origin, type) census over BOTH
-    * event lists with an attribute-count checksum: a misrouted event flips
-    * an origin count, a leaked marker inflates `n_attrs` — either breaks
-    * the hash against DuckDB reading the original split templates.
+    * ([[graft.sources.grpc.TendermintGrpcCodec]]'s block-results scaladoc
+    * carries the routing rules). The gate is a per-(origin, type) census
+    * over BOTH event lists with an attribute-count checksum: a misrouted
+    * event flips an origin count, a leaked marker inflates `n_attrs` —
+    * either breaks the hash against DuckDB reading the original split
+    * templates.
     */
   val st13GrpcV038Events = GQuery(
     "st13_grpc_v038_block_events",
     (s, _) => {
-      val stub = new graft.StubGrpcServer(T, resultsLayout = "v038")
+      val stub = new graft.StubGrpcServer(T)
       try {
         // materialize ONE connector pass (localCheckpoint), then census the
         // two event lists off it — two lazy branches would re-fetch every
@@ -779,7 +780,7 @@ object Blocks extends QueryPack {
         // resultsRequested: proof the per-height ask happened (see st12's
         // note — two golden heights legitimately answer NOT_FOUND)
         require(stub.resultsRequested >= 100,
-          "st13 never exercised the v038 block-results service")
+          "st13 never exercised the gRPC block-results service")
         def census(listCol: String, origin: String) = raw
           .select(explode(coalesce(col(listCol), array())).as("e"))
           .select(lit(origin).as("origin"),

@@ -54,6 +54,19 @@ object BlockFeed {
   /** Meta-safe raw-schema ordinals (available from `/blockchain` pages). */
   val MetaSafeOrdinals: Set[Int] = Set(0, 1, 2, 3, 4, 6)
   val RawFields: Array[String] = BlockSchemas.raw.fieldNames
+
+  /** `heightsPerPartition` default = reference `DEFAULT_BATCH_SIZE`. */
+  val DefaultHeightsPerPartition = 128
+  /** `retryBaseWaitMs` default = reference `Backoff.kt:12` base. */
+  val DefaultRetryBaseWaitMs = 1000L
+
+  /** The transport for `path` behind the T4 retry decorator, for executor
+    * fetches and driver-side planning alike: planning has no task retry
+    * above it, so a 503 there must not kill a query that the same blip
+    * mid-read would survive.
+    */
+  def client(path: String, retryBaseWaitMs: Long): BlockClient =
+    new RetryingBlockClient(BlockClient.open(path), baseWaitMillis = retryBaseWaitMs)
 }
 
 class BlockFeedTable(options: CaseInsensitiveStringMap)
@@ -126,15 +139,10 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
   extends Scan {
 
   private val path = options.get("path")
-  // planning RPCs (bounds, page probing) deserve the same T4 transient
-  // retry as the executor readers: a 503 during planSplits must not kill
-  // the whole query when the same blip mid-read would be absorbed
   // T4 backoff is configurable so tests/chaos drills don't pay production
-  // waits; default = the reference's 1 s base (Backoff.kt:12)
-  private val retryBaseWaitMs = options.getLong("retryBaseWaitMs", 1000L)
-  private def client: BlockClient =
-    new RetryingBlockClient(BlockClient.open(path),
-      baseWaitMillis = retryBaseWaitMs)
+  // waits
+  private val retryBaseWaitMs =
+    options.getLong("retryBaseWaitMs", BlockFeed.DefaultRetryBaseWaitMs)
 
   private val prunedOrdinals: Array[Int] =
     required.fieldNames.map(n => BlockFeed.RawFields.indexOf(n))
@@ -143,7 +151,7 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
   val metaMode: Boolean = prunedOrdinals.forall(BlockFeed.MetaSafeOrdinals.contains)
 
   private val heightsPerPartition =
-    options.getInt("heightsPerPartition", 128)
+    options.getInt("heightsPerPartition", BlockFeed.DefaultHeightsPerPartition)
 
   override def readSchema(): StructType = required
   override def description(): String =
@@ -162,7 +170,7 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
-      val c = client
+      val c = BlockFeed.client(path, retryBaseWaitMs)
       // ONE tip RPC: it serves both the default upper bound and the
       // history/live provenance boundary (two separate calls could also
       // disagree if the chain advanced between them)
@@ -200,17 +208,16 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
                           minNumTxs: Int)
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  // retry-wrapped for the same reason as BlockFeedScan.client: offset
-  // planning runs once per trigger on the driver and has no task retry
-  // above it
-  private val retryBaseWaitMs = options.getLong("retryBaseWaitMs", 1000L)
-  private val client = new RetryingBlockClient(BlockClient.open(path),
-    baseWaitMillis = retryBaseWaitMs)
+  private val retryBaseWaitMs =
+    options.getLong("retryBaseWaitMs", BlockFeed.DefaultRetryBaseWaitMs)
+  private val client = BlockFeed.client(path, retryBaseWaitMs)
   /** Chain tip at stream construction: the history/live provenance boundary
     * (reference `combinedFlow` captures the same thing, `MultiplexFlow.kt:88`).
     */
   private val startCurrentHeight = client.currentHeight()
   private val maxPerTrigger = options.getInt("maxHeightsPerTrigger", 10000)
+  private val heightsPerPartition =
+    options.getInt("heightsPerPartition", BlockFeed.DefaultHeightsPerPartition)
   private val from: Long = Option(options.get("from")) match {
     case Some("latest") => startCurrentHeight + 1
     case Some(v) => v.toLong
@@ -334,7 +341,7 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
         else client.availableHeights(s + 1, e)
       }
     heights
-      .grouped(options.getInt("heightsPerPartition", 128))
+      .grouped(heightsPerPartition)
       .map(h => HeightRangePartition(h.toArray, startCurrentHeight, metaMode))
       .toArray[InputPartition]
   }
@@ -348,16 +355,14 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
 }
 
 class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
-                             minNumTxs: Int, retryBaseWaitMs: Long = 1000L)
+                             minNumTxs: Int, retryBaseWaitMs: Long)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
     val p = partition.asInstanceOf[HeightRangePartition]
     // T4: executor-side fetches retry transient I/O with the reference's
     // exponential backoff before surfacing a task failure
-    new BlockFeedPartitionReader(
-      new RetryingBlockClient(BlockClient.open(path),
-        baseWaitMillis = retryBaseWaitMs), p, prunedOrdinals, minNumTxs,
-      retryBaseWaitMs)
+    new BlockFeedPartitionReader(BlockFeed.client(path, retryBaseWaitMs), p,
+      prunedOrdinals, minNumTxs, retryBaseWaitMs)
   }
 }
 
@@ -370,7 +375,7 @@ class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
   */
 class BlockFeedPartitionReader(client: BlockClient, p: HeightRangePartition,
                                prunedOrdinals: Array[Int], minNumTxs: Int,
-                               retryBaseWaitMs: Long = 1000L)
+                               retryBaseWaitMs: Long)
   extends PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
 
   private val codec = new RowCodec

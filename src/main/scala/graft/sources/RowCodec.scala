@@ -49,6 +49,38 @@ final class RowCodec {
     else DateTimeUtils.stringToTimestamp(timeStr, java.time.ZoneOffset.UTC)
       .map(_.asInstanceOf[AnyRef]).orNull
 
+  /** One [[BlockSchemas.raw]] row projected to `prunedOrdinals`, shared by
+    * the full and the meta path. `payloads` = the full-mode columns (the
+    * block struct, and the results struct — absent degrades the event
+    * columns to null); a meta-mode row has none, so asking it for one of
+    * those ordinals is a planning bug and throws.
+    */
+  private def project(prunedOrdinals: Array[Int], height: Long,
+                      header: InternalRow, numTxs: Int, historical: Boolean,
+                      blockId: InternalRow,
+                      payloads: Option[(InternalRow, Option[InternalRow])]): InternalRow = {
+    def fieldValue(ord: Int): Any = ord match {
+      case 0 => height
+      case 1 => ts(header.getUTF8String(3))
+      case 2 => header.getUTF8String(1)
+      case 3 => numTxs
+      case 4 => historical
+      case 6 => blockId
+      case other if payloads.isEmpty =>
+        throw new IllegalStateException(
+          s"raw ordinal $other not available in meta-only scan")
+      case 5 => payloads.get._1
+      case 7 | 8 | 9 => payloads.get._2.map(_.getArray(ord - 6)).orNull
+    }
+    val out = new GenericInternalRow(prunedOrdinals.length)
+    var i = 0
+    while (i < prunedOrdinals.length) {
+      out.update(i, fieldValue(prunedOrdinals(i)))
+      i += 1
+    }
+    out
+  }
+
   /** Assemble one [[BlockSchemas.raw]]-shaped row (projected to
     * `prunedOrdinals` of the raw schema) from the two RPC payloads.
     * The two None-shaped outcomes a PLANNED-height reader must treat
@@ -116,26 +148,8 @@ final class RowCodec {
               // documented left-join parity), never an NPE in fieldValue
               val res = resultsJson.flatMap(j => parseOne(resultsParser, j))
                 .map(_.getStruct(1, 4)).filter(_ != null)
-              // full raw row field values by raw-schema ordinal
-              def fieldValue(ord: Int): Any = ord match {
-                case 0 => height
-                case 1 => ts(header.getUTF8String(3))
-                case 2 => header.getUTF8String(1)
-                case 3 => numTxs
-                case 4 => historical
-                case 5 => block
-                case 6 => blockId
-                case 7 => res.map(r => r.getArray(1)).orNull
-                case 8 => res.map(r => r.getArray(2)).orNull
-                case 9 => res.map(r => r.getArray(3)).orNull
-              }
-              val out = new GenericInternalRow(prunedOrdinals.length)
-              var i = 0
-              while (i < prunedOrdinals.length) {
-                out.update(i, fieldValue(prunedOrdinals(i)))
-                i += 1
-              }
-              Right(Some(out))
+              Right(Some(project(prunedOrdinals, height, header, numTxs,
+                historical, blockId, Some((block, res)))))
             }
           }
           }
@@ -190,26 +204,9 @@ final class RowCodec {
               else if (numTxsOpt.get < minNumTxs)
                 Some((heightOpt.get, None))
               else {
-                val numTxs = numTxsOpt.get
                 val height = heightOpt.get
-                def fieldValue(ord: Int): Any = ord match {
-                  case 0 => height
-                  case 1 => ts(header.getUTF8String(3))
-                  case 2 => header.getUTF8String(1)
-                  case 3 => numTxs
-                  case 4 => isHistorical(height)
-                  case 6 => blockId
-                  case other =>
-                    throw new IllegalStateException(
-                      s"raw ordinal $other not available in meta-only scan")
-                }
-                val out = new GenericInternalRow(prunedOrdinals.length)
-                var j = 0
-                while (j < prunedOrdinals.length) {
-                  out.update(j, fieldValue(prunedOrdinals(j)))
-                  j += 1
-                }
-                Some((height, Some(out)))
+                Some((height, Some(project(prunedOrdinals, height, header,
+                  numTxsOpt.get, isHistorical(height), blockId, None))))
               }
             }
           }.toSeq

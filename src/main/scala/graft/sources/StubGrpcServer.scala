@@ -25,9 +25,12 @@ import java.util.concurrent.atomic.AtomicInteger
   * node tip — the block at the historical ceiling, mirroring
   * `abci_info`'s start-tip role on the HTTP stub) and `GetBlockByHeight`,
   * plus `cometbft.services.block_results.v1.BlockResultsService/
-  * GetBlockResults`. Unknown methods answer UNIMPLEMENTED(12); missing
-  * heights answer NOT_FOUND(5); `failNext(n)` makes the next n calls answer
-  * UNAVAILABLE(14) — the T4 transient path through the retry decorator.
+  * GetBlockResults` in the 0.38 layout a real node serves (begin/end events
+  * folded into `finalize_block_events` with the cosmos-sdk's `mode` markers,
+  * [[TendermintGrpcCodec.encodeBlockResultsResponse]]). Unknown methods
+  * answer UNIMPLEMENTED(12); missing heights answer NOT_FOUND(5);
+  * `failNext(n)` makes the next n calls answer UNAVAILABLE(14) — the T4
+  * transient path through the retry decorator.
   *
   * Ships in the main artifact for the same documented reason as
   * [[StubRpcServer]]: the gate queries construct it from the production
@@ -38,23 +41,9 @@ final class StubGrpcServer(dir: String,
                            val histTo: Long = 2270469L,
                            val liveCount: Int = 6,
                            val liveSrcFrom: Long = 3126935L,
-                           resultsLayout: String = "v034",
                            advanceTipAfterFirstPoll: Boolean = false,
                            maxConcurrentStreams: Int = 0)
   extends StubChainNode {
-
-  require(resultsLayout == "v034" || resultsLayout == "v038",
-    s"unknown results layout $resultsLayout")
-
-  /** Block-results encoder for the node generation this stub models:
-    * `v034` = the fixtures' split layout; `v038` = the real ≥0.38 layout
-    * (begin/end folded into `finalize_block_events` with the sdk's `mode`
-    * markers, plus the `validator_updates`/`app_hash` fields a real node
-    * always carries — [[TendermintGrpcCodec.encodeBlockResultsResponseV038]]).
-    */
-  private val encodeResults: String => Array[Byte] =
-    if (resultsLayout == "v038") TendermintGrpcCodec.encodeBlockResultsResponseV038
-    else TendermintGrpcCodec.encodeBlockResultsResponse
 
   // Chain model, chaos contract, and proof-hook counters: StubChainNode,
   // shared verbatim with the HTTP stub. One gRPC-specific note on the tip:
@@ -159,7 +148,8 @@ final class StubGrpcServer(dir: String,
       case GrpcBlockClient.GetBlockResultsPath =>
         val h = TendermintGrpcCodec.decodeHeightRequest(GrpcWire.unframe(requestBody))
         countResultsRequest()
-        encoded(s"$dir/block_results/${srcHeight(h)}.json", encodeResults) match {
+        encoded(s"$dir/block_results/${srcHeight(h)}.json",
+          TendermintGrpcCodec.encodeBlockResultsResponse) match {
           case Some(b) =>
             // the SERVE count sits beside the OK answer, in lockstep with
             // the HTTP stub: resultsServes means answered-with-payload on
@@ -271,11 +261,8 @@ final class StubGrpcServer(dir: String,
   val port: Int =
     serverChannel.localAddress().asInstanceOf[java.net.InetSocketAddress].getPort
 
-  /** Client-ready URI, ALWAYS layout-explicit: the client defaults to the
-    * real-node v038 layout, so a v034 stub that omitted the option would be
-    * silently misdecoded — callers get the right layout with no bookkeeping.
-    */
-  def base: String = s"grpc://127.0.0.1:$port?results=$resultsLayout"
+  /** Client-ready URI. */
+  def base: String = s"grpc://127.0.0.1:$port"
 
   /** Closes the listener; the event loop is daemon and shut down gracefully
     * (0 s quiet period) so no non-daemon thread outlives the stub — the

@@ -55,20 +55,13 @@ object GrpcBlockClient {
   *     `[max(from,1), min(to, tip)]` (the HTTP transport's same assumption
   *     when `/status` is absent); the tendermint gRPC service exposes no
   *     earliest-height RPC, so a pruning node's floor is not visible here.
-  *   - `blockResults` speaks BOTH response layouts of the CometBFT
-  *     block-results service, selected by the URI
-  *     (`grpc://host:port?results=v034|v038`): `v038` — the DEFAULT,
-  *     because every real node serving this RPC is ≥0.38 — is one
-  *     `finalize_block_events` list, reconstructed into the engine's
-  *     begin/end split via the cosmos-sdk's `mode` attribute marker
-  *     ([[TendermintGrpcCodec.decodeBlockResultsResponseV038]]'s scaladoc
-  *     carries the routing rules); `v034` is the 0.34-era split layout
-  *     this engine's fixtures speak (no 0.34 gRPC analog existed; see
-  *     [[TendermintGrpcCodec]]), spoken only by the test stub, which
-  *     states it explicitly in the URI it hands out. The layout cannot be
-  *     sniffed from the wire (both field 3s are repeated Events), so it is
-  *     a connection option — the other two services are the standard
-  *     cosmos-sdk ones, identical across versions.
+  *   - `blockResults` = the CometBFT block-results service, whose 0.38
+  *     response (the only one: the service did not exist before 0.38)
+  *     folds begin/end events into one `finalize_block_events` list; the
+  *     codec reconstructs the engine's begin/end split from the cosmos-sdk's
+  *     `mode` attribute markers
+  *     ([[TendermintGrpcCodec.decodeBlockResultsResponse]]). The other two
+  *     services are the standard cosmos-sdk ones, identical across versions.
   *   - `metaPages`: gRPC has no paged `/blockchain` RPC, so this client
   *     keeps the [[BlockClient]] default (no pages) and a header-only scan
   *     reads every planned height through the reader's per-height `block()`
@@ -87,34 +80,20 @@ object GrpcBlockClient {
   */
 final class GrpcBlockClient(base: String) extends BlockClient {
 
-  private val (host, port, resultsV038) = {
-    val (hpPart, query) = base.stripPrefix("grpc://").split("\\?", 2) match {
-      case Array(hp, q) => (hp, q)
-      case Array(hp) => (hp, "")
-    }
-    val params = query.split("&").filter(_.nonEmpty).map(_.split("=", 2))
-    // `results` is the only option: an unknown name (a typo, or a
-    // parameter an older build accepted) must fail here, not be ignored
-    params.map(_(0)).find(_ != "results").foreach { name =>
+  private val (host, port) = {
+    // a grpc:// URI is host:port and nothing else: a query parameter (a
+    // typo, or an option an older build accepted) must fail here, not be
+    // silently ignored
+    val (hpPart, query) = base.stripPrefix("grpc://").span(_ != '?')
+    query.stripPrefix("?").split("&").find(_.nonEmpty).foreach { param =>
       throw new IllegalArgumentException(
-        s"unknown parameter '$name' in $base (only results=v034|v038)")
-    }
-    // default v038: every real node that serves the BlockResultsService is
-    // ≥0.38 (the service did not exist before), and the layouts cannot be
-    // sniffed apart on the wire — defaulting to the fixtures' v034 shape
-    // would silently misdecode 100% of real endpoints (all events routed to
-    // begin, markers leaked as data). The v034 speaker is the test stub,
-    // which states its layout explicitly in the URI it hands out.
-    val v038 = params.collectFirst { case Array("results", v) => v } match {
-      case Some("v038") | None => true
-      case Some("v034") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"unknown results layout '$other' in $base (v034 | v038)")
+        s"unknown parameter '${param.split("=", 2)(0)}' in $base " +
+          "(a grpc:// URI takes no parameters)")
     }
     hpPart.stripSuffix("/").split(":", 2) match {
-      case Array(h, p) => (h, p.toInt, v038)
+      case Array(h, p) => (h, p.toInt)
       case _ => throw new IllegalArgumentException(
-        s"grpc:// URI must be grpc://host:port[?results=v034|v038], got $base")
+        s"grpc:// URI must be grpc://host:port, got $base")
     }
   }
 
@@ -156,6 +135,5 @@ final class GrpcBlockClient(base: String) extends BlockClient {
   override def blockResults(height: Long): Option[String] =
     call(GrpcBlockClient.GetBlockResultsPath,
       TendermintGrpcCodec.encodeHeightRequest(height))
-      .map(if (resultsV038) TendermintGrpcCodec.decodeBlockResultsResponseV038
-           else TendermintGrpcCodec.decodeBlockResultsResponse)
+      .map(TendermintGrpcCodec.decodeBlockResultsResponse)
 }

@@ -85,6 +85,9 @@ object GrpcWire {
     */
   val PoolSize = 4
 
+  /** Budget for a TCP dial and for opening one HTTP/2 stream on it. */
+  val ConnectTimeoutMillis = 10000
+
   /** Shared client event loop: [[PoolSize]] daemon threads serve every
     * connection this JVM opens (executor tasks do blocking unary calls; the
     * loop only shuffles frames).
@@ -99,7 +102,6 @@ object GrpcWire {
   * threads (each call opens its own HTTP/2 stream).
   */
 final class GrpcConnection(host: String, port: Int,
-                           connectTimeoutMillis: Int = 10000,
                            callTimeoutMillis: Int = 60000) {
 
   // CAS slot, not a synchronized field: evict() may be called from a netty
@@ -119,7 +121,8 @@ final class GrpcConnection(host: String, port: Int,
         val b = new Bootstrap()
           .group(GrpcWire.eventLoop)
           .channel(classOf[NioSocketChannel])
-          .option[java.lang.Integer](ChannelOption.CONNECT_TIMEOUT_MILLIS, connectTimeoutMillis)
+          .option[java.lang.Integer](ChannelOption.CONNECT_TIMEOUT_MILLIS,
+            GrpcWire.ConnectTimeoutMillis)
           // netty leaves Nagle ON by default; a unary gRPC call is exactly
           // the two-small-writes pattern (HEADERS, then DATA) that trips
           // Nagle × delayed-ACK into a flat ~40 ms per RPC on loopback —
@@ -156,7 +159,8 @@ final class GrpcConnection(host: String, port: Int,
             }
           })
         val f = b.connect()
-        if (!f.awaitUninterruptibly(connectTimeoutMillis.toLong, TimeUnit.MILLISECONDS)) {
+        if (!f.awaitUninterruptibly(GrpcWire.ConnectTimeoutMillis.toLong,
+            TimeUnit.MILLISECONDS)) {
           // a late-completing connect must not leak its channel onto the
           // daemon loop for the JVM lifetime (one orphan per retry attempt)
           f.cancel(true)
@@ -278,8 +282,9 @@ final class GrpcConnection(host: String, port: Int,
     })
 
     val streamF = bootstrap.open()
-    if (!streamF.awaitUninterruptibly(connectTimeoutMillis.toLong, TimeUnit.MILLISECONDS) ||
-        !streamF.isSuccess) {
+    val opened = streamF.awaitUninterruptibly(
+      GrpcWire.ConnectTimeoutMillis.toLong, TimeUnit.MILLISECONDS)
+    if (!opened || !streamF.isSuccess) {
       // an isActive connection that refuses new streams is GOAWAY-draining
       // or half-open — evict it so the next attempt dials fresh instead of
       // burning the whole retry ladder against the same doomed parent

@@ -27,20 +27,25 @@ import graft.blocks.ProtoWire.{Reader, Writer}
   *
   * Block RESULTS have no public gRPC analog at Tendermint 0.34 (the era of
   * the reference's fixtures — `/block_results` is JSON-RPC only there);
-  * CometBFT ≥0.38 added `cometbft.services.block_results.v1
-  * .BlockResultsService/GetBlockResults`. We implement that service name
-  * with the 0.34-era response split (a 0.38 node folds begin/end into one
-  * `finalize_block_events` list — the engine's schema and the reference's
-  * model, `es-api-model/.../BlockResultsResponseResult`, keep them apart):
+  * CometBFT 0.38 added `cometbft.services.block_results.v1
+  * .BlockResultsService/GetBlockResults`, so every node that serves the RPC
+  * speaks the 0.38 (ABCI 2.0) response, which folds the begin/end block
+  * events into one `finalize_block_events` list. The engine's schema and
+  * the reference's model (`es-api-model/.../BlockResultsResponseResult`)
+  * keep the 0.34 split; the decoder reconstructs it from the cosmos-sdk's
+  * `mode` markers (see "block results" below):
   *
   *   GetBlockResultsRequest  { height = 1 }
-  *   GetBlockResultsResponse { height = 1, txs_results = 2 (repeated),
-  *                             begin_block_events = 3, end_block_events = 4 }
+  *   GetBlockResultsResponse { height = 1, tx_results = 2 (repeated),
+  *                             finalize_block_events = 3,
+  *                             validator_updates = 4,
+  *                             consensus_param_updates = 5, app_hash = 6 }
   *   ExecTxResult   { code = 1, data = 2, log = 3, info = 4, gas_wanted = 5,
   *                    gas_used = 6, events = 7, codespace = 8 }
   *   Event          { type = 1, attributes = 2 }
-  *   EventAttribute { key = 1 (bytes), value = 2 (bytes), index = 3 } (0.34:
-  *                    key/value are bytes → base64 strings in RPC JSON)
+  *   EventAttribute { key = 1, value = 2, index = 3 } (`string` since 0.37,
+  *                    `bytes` before — the same length-delimited encoding;
+  *                    the engine keeps the corpus-era base64 rendering)
   *
   * JSON conventions mirror the golden corpus exactly (pinned by
   * `GrpcCodecSpec`'s full-corpus round-trip): heights/gas as JSON strings,
@@ -265,29 +270,6 @@ object TendermintGrpcCodec {
     }
     w.stringField(8, t.path("codespace").asText(""))
     w
-  }
-
-  /** Template `/block_results` response JSON → `GetBlockResultsResponse`. */
-  def encodeBlockResultsResponse(json: String): Array[Byte] = {
-    val result = mapper.readTree(json).path("result")
-    val w = new Writer(8192)
-    w.int64(1, result.path("height").asText("0").toLong)
-    val txs = result.path("txs_results")
-    if (txs.isArray) {
-      val it = txs.elements()
-      while (it.hasNext) w.messageAlways(2, encTxResult(it.next()))
-    }
-    val begin = result.path("begin_block_events")
-    if (begin.isArray) {
-      val it = begin.elements()
-      while (it.hasNext) w.messageAlways(3, encEvent(it.next()))
-    }
-    val end = result.path("end_block_events")
-    if (end.isArray) {
-      val it = end.elements()
-      while (it.hasNext) w.messageAlways(4, encEvent(it.next()))
-    }
-    w.bytes
   }
 
   // ======================================================================
@@ -582,88 +564,40 @@ object TendermintGrpcCodec {
     n
   }
 
-  /** `GetBlockResultsResponse` bytes → the engine's `/block_results`
-    * JSON-RPC envelope. Empty repeated fields render as JSON `null`
-    * (matching the corpus — empty blocks carry `"txs_results": null`).
-    */
-  def decodeBlockResultsResponse(bytes: Array[Byte]): String = {
-    val r = new Reader(bytes)
-    var height = 0L
-    val txs = mapper.createArrayNode()
-    val begin = mapper.createArrayNode()
-    val end = mapper.createArrayNode()
-    while (r.hasNext) {
-      val (f, w) = r.tag()
-      (f, w) match {
-        case (1, 0) => height = r.varint()
-        case (2, 2) => val (s, e) = r.lenDelimited(); txs.add(decTxResult(r.subReader(s, e)))
-        case (3, 2) => val (s, e) = r.lenDelimited(); begin.add(decEvent(r.subReader(s, e)))
-        case (4, 2) => val (s, e) = r.lenDelimited(); end.add(decEvent(r.subReader(s, e)))
-        case _ => r.skip(w)
-      }
-    }
-    resultsEnvelope(height, txs, begin, end)
-  }
-
-  private def resultsEnvelope(height: Long, txs: ArrayNode,
-                              begin: ArrayNode, end: ArrayNode): String = {
-    val root = mapper.createObjectNode()
-    root.put("jsonrpc", "2.0")
-    root.put("id", -1)
-    val result = root.putObject("result")
-    result.put("height", height.toString)
-    def setOrNull(name: String, arr: ArrayNode): Unit =
-      if (arr.size() > 0) result.set[JsonNode](name, arr) else result.putNull(name)
-    setOrNull("txs_results", txs)
-    setOrNull("begin_block_events", begin)
-    setOrNull("end_block_events", end)
-    mapper.writeValueAsString(root)
-  }
-
   // ======================================================================
-  // CometBFT ≥0.38 block-results layout — the layout a REAL node's
-  // BlockResultsService serves (the service only EXISTS from 0.38 on)
+  // block results: the ≥0.38 layout (header scaladoc) and the begin/end
+  // split the engine reconstructs from it
   // ======================================================================
 
-  /** ABCI 2.0 (CometBFT 0.38, public spec) folded begin/end block events
-    * into one FinalizeBlock list, and the response message changed shape:
-    *
-    *   GetBlockResultsResponse { height = 1, tx_results = 2,
-    *                             finalize_block_events = 3,
-    *                             validator_updates = 4,
-    *                             consensus_param_updates = 5, app_hash = 6 }
-    *
-    * The old split is still wire-visible: the cosmos-sdk's baseapp tags
-    * every finalize event it migrates with an appended attribute
-    * `mode = BeginBlock | EndBlock` (public cosmos-sdk behavior since the
-    * ABCI 2.0 migration). This codec uses that marker to reconstruct the
-    * engine's (and the reference's, `BlockResultsResponseResult`) split
-    * model: `mode=BeginBlock` → `begin_block_events`, `mode=EndBlock` →
-    * `end_block_events`, and an event with NO marker (a chain emitting raw
-    * finalize events outside the sdk's begin/end blockers) → `end_block_
-    * events`, since untagged finalize events fire after tx delivery — the
-    * end-block position in the 0.34 model. The marker attribute itself is
-    * STRIPPED from the reconstructed event (it is transport framing, not
-    * app data; keeping it would make the same chain's events differ by
-    * transport). An attribute that merely LOOKS like the marker (`mode`
-    * key with any other value) is app data and is kept, routed to end.
-    *
-    * On the wire the 0.37+ `EventAttribute.key/value` are `string` where
-    * 0.34 had `bytes` — identical length-delimited encoding, so the decode
-    * path is shared and the engine keeps its corpus-era base64 rendering.
+  /** The 0.34 split is still wire-visible in the 0.38 layout: the
+    * cosmos-sdk's baseapp tags every finalize event it migrates with an
+    * appended attribute `mode = BeginBlock | EndBlock` (public cosmos-sdk
+    * behavior since the ABCI 2.0 migration). This codec uses that marker to
+    * reconstruct the engine's (and the reference's,
+    * `BlockResultsResponseResult`) split model: `mode=BeginBlock` →
+    * `begin_block_events`, `mode=EndBlock` → `end_block_events`, and an
+    * event with NO marker (a chain emitting raw finalize events outside the
+    * sdk's begin/end blockers) → `end_block_events`, since untagged
+    * finalize events fire after tx delivery — the end-block position in the
+    * 0.34 model. The marker attribute itself is STRIPPED from the
+    * reconstructed event (it is transport framing, not app data; keeping it
+    * would make the same chain's events differ by transport). An attribute
+    * that merely LOOKS like the marker (`mode` key with any other value) is
+    * app data and is kept, routed to end.
     */
   private val ModeKeyB64 = bytesToB64("mode".getBytes("UTF-8"))
   private val BeginModeB64 = bytesToB64("BeginBlock".getBytes("UTF-8"))
   private val EndModeB64 = bytesToB64("EndBlock".getBytes("UTF-8"))
 
-  /** Template `/block_results` JSON → the ≥0.38 wire shape (the stub node's
-    * v038 serving side): begin/end lists folded into `finalize_block_events`
-    * with the sdk's `mode` marker appended to each, plus the response fields
-    * the engine never reads — a `ValidatorUpdate{power}` at 4 and an
-    * `app_hash` at 6 — so a client must genuinely SKIP unknown fields to
-    * decode this (they are always present on a real node's wire).
+  /** Template `/block_results` JSON → `GetBlockResultsResponse` bytes (the
+    * stub node's serving side): begin/end lists folded into
+    * `finalize_block_events` with the sdk's `mode` marker appended to each,
+    * plus response fields the engine never reads — a
+    * `ValidatorUpdate{power}` at 4 and an `app_hash` at 6 — so a client
+    * must genuinely SKIP unknown fields to decode this (they are always
+    * present on a real node's wire).
     */
-  def encodeBlockResultsResponseV038(json: String): Array[Byte] = {
+  def encodeBlockResultsResponse(json: String): Array[Byte] = {
     val result = mapper.readTree(json).path("result")
     val w = new Writer(8192)
     w.int64(1, result.path("height").asText("0").toLong)
@@ -692,14 +626,14 @@ object TendermintGrpcCodec {
     w.bytes
   }
 
-  /** ≥0.38 `GetBlockResultsResponse` bytes → the engine's 0.34-era
-    * `/block_results` JSON-RPC envelope (split reconstructed per the mode
-    * marker — scaladoc above). `tx_results` decode is shared with v034;
-    * `validator_updates`/`consensus_param_updates`/`app_hash` are skipped
-    * (not part of the engine's schema, same as the v034 round-trip note in
-    * `GrpcCodecSpec`).
+  /** `GetBlockResultsResponse` bytes → the engine's `/block_results`
+    * JSON-RPC envelope, the begin/end split reconstructed from the mode
+    * markers (scaladoc above). `validator_updates`/`consensus_param_updates`
+    * /`app_hash` are skipped: they are not part of the engine's schema.
+    * Empty lists render as JSON `null` (matching the corpus — empty blocks
+    * carry `"txs_results": null`).
     */
-  def decodeBlockResultsResponseV038(bytes: Array[Byte]): String = {
+  def decodeBlockResultsResponse(bytes: Array[Byte]): String = {
     val r = new Reader(bytes)
     var height = 0L
     val txs = mapper.createArrayNode()
@@ -720,7 +654,17 @@ object TendermintGrpcCodec {
         case _ => r.skip(w)
       }
     }
-    resultsEnvelope(height, txs, begin, end)
+    val root = mapper.createObjectNode()
+    root.put("jsonrpc", "2.0")
+    root.put("id", -1)
+    val result = root.putObject("result")
+    result.put("height", height.toString)
+    def setOrNull(name: String, arr: ArrayNode): Unit =
+      if (arr.size() > 0) result.set[JsonNode](name, arr) else result.putNull(name)
+    setOrNull("txs_results", txs)
+    setOrNull("begin_block_events", begin)
+    setOrNull("end_block_events", end)
+    mapper.writeValueAsString(root)
   }
 
   /** Finds the sdk's `mode` marker on a decoded finalize event, strips it,

@@ -28,19 +28,16 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
 
   test("scheme selection: grpc:// opens the gRPC transport") {
     assert(BlockClient.open("grpc://127.0.0.1:1").isInstanceOf[GrpcBlockClient])
-    // layout option: both generations accepted, anything else rejected
-    // LOUDLY at construction (a typo must not silently become the default)
-    assert(BlockClient.open("grpc://127.0.0.1:1?results=v034").isInstanceOf[GrpcBlockClient])
-    assert(BlockClient.open("grpc://127.0.0.1:1?results=v038").isInstanceOf[GrpcBlockClient])
-    intercept[IllegalArgumentException](BlockClient.open("grpc://127.0.0.1:1?results=v2"))
     intercept[IllegalArgumentException](BlockClient.open("grpc://no-port"))
-    // `results` is the only URI option: any other name fails naming both
-    // the parameter and the URI (a removed option must not be silently
-    // ignored)
-    for (uri <- Seq("grpc://127.0.0.1:1?callTimeoutMillis=400",
-                    "grpc://127.0.0.1:1?results=v034&callTimeoutMillis=400")) {
+    // a grpc:// URI takes no options: any parameter — including the
+    // removed `results` layout switch and `callTimeoutMillis` — fails
+    // naming both the parameter and the URI, never silently ignored
+    for ((uri, name) <- Seq(
+           "grpc://127.0.0.1:1?results=v038" -> "results",
+           "grpc://127.0.0.1:1?results=v034" -> "results",
+           "grpc://127.0.0.1:1?callTimeoutMillis=400" -> "callTimeoutMillis")) {
       val e = intercept[IllegalArgumentException](BlockClient.open(uri))
-      assert(e.getMessage.contains("callTimeoutMillis") && e.getMessage.contains(uri),
+      assert(e.getMessage.contains(s"'$name'") && e.getMessage.contains(uri),
         e.getMessage)
     }
   }
@@ -54,6 +51,18 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
       assert(EventTables.txEvents(df).count() === Fixture.txEventRows)
       assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
       assert(df.filter(col("num_txs") > 0).count() === 29L)
+      // the stub serves the 0.38 layout (begin/end folded into one list
+      // with mode markers): the reconstructed end list must equal the file
+      // transport's. Count equality + one-direction multiset containment ⇒
+      // equality; the count is what makes this non-vacuous (a misroute
+      // empties df's end list, and empty.exceptAll(x) is 0 rows)
+      val viaFile = FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L)
+      def endTypes(d: org.apache.spark.sql.DataFrame) =
+        d.select(explode(col("end_block_events")).as("e")).select(col("e.type"))
+      val expectedEnd = endTypes(viaFile).count()
+      assert(expectedEnd > 0L)
+      assert(endTypes(df).count() === expectedEnd)
+      assert(endTypes(df).exceptAll(endTypes(viaFile)).count() === 0L)
     }
   }
 
@@ -124,33 +133,6 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
       assert(absent.length === 2 && absent.forall(_.isNullAt(1)),
         "absent results must degrade to null event columns, not drop rows")
     }
-  }
-
-  test("a bare grpc:// URI defaults to the v038 layout (the only real-node shape)") {
-    // every real node serving the BlockResultsService is ≥0.38, so a user
-    // pointing the connector at one WITHOUT a ?results option must get the
-    // correct split — this pins the default; the v034 stub states its own
-    // layout in stub.base, so only an explicit bare URI exercises it
-    val stub = new StubGrpcServer(T, resultsLayout = "v038")
-    try {
-      val df = spark.read.format("blockfeed")
-        .option("path", s"grpc://127.0.0.1:${stub.port}") // NO ?results
-        .option("from", "2270370").option("to", "2270469").load()
-      // the begin/end split reconstructed from the mode markers must match
-      // the file transport's ground truth — a wrong default would route all
-      // finalize events to begin (emptying end) and leak marker attributes
-      assert(EventTables.blockEvents(df).count() === Fixture.blockEventRows)
-      val viaFile = FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L)
-      def endTypes(d: org.apache.spark.sql.DataFrame) =
-        d.select(explode(col("end_block_events")).as("e")).select(col("e.type"))
-      // count equality + one-direction multiset containment ⇒ equality;
-      // the count check is what makes this non-vacuous (a misrouting
-      // default empties df's end list, and empty.exceptAll(x) is 0 rows)
-      val expectedEnd = endTypes(viaFile).count()
-      assert(expectedEnd > 0L)
-      assert(endTypes(df).count() === expectedEnd)
-      assert(endTypes(df).exceptAll(endTypes(viaFile)).count() === 0L)
-    } finally stub.stop()
   }
 
   test("height-list scan (S2) over grpc plans only the listed heights") {
