@@ -10,15 +10,15 @@ object Bench {
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
     // warm the JVM/codegen/catalog paths once so first-query timings measure
     // the query, not process startup: a trivial agg (codegen), the parquet
-    // catalog, the per-session fixture raw-relation caches (the staged
-    // source table every block query starts from), and the cached
-    // StreamBlock schema derivation
+    // catalog, one `blockfeed` count (the connector's planning and reader
+    // path every block query takes), and the cached StreamBlock schema
+    // derivation
     try {
       spark.range(16).selectExpr("sum(id)").count()
       Tables.load(spark, sfDir, "documents").limit(1).count()
-      val t = graft.blocks.FixtureSource.DefaultTemplates
-      graft.blocks.FixtureSource.blocksRaw(spark, t, 2270370L, 2270469L).count()
-      graft.blocks.FixtureSource.combinedRaw(spark, t, 2270370L).count()
+      spark.read.format("blockfeed")
+        .option("path", graft.blocks.FixtureSource.DefaultTemplates)
+        .option("from", "2270370").option("to", "2270469").load().count()
       graft.sinks.BlockSinks.streamBlockSchema(spark)
     } catch { case e: Throwable =>
       System.err.println("[bench] warm-up failed:")
@@ -48,7 +48,7 @@ object Bench {
       if (probeOn) probe() else (-1.0, -1.0, -1.0)
     // any persist() created INSIDE a query (dd2/dd4/dd10/pipe1/sim7 build
     // sides) is freed after that query so storage memory doesn't accumulate
-    // across the sweep; the shared per-session fixture relations are kept.
+    // across the sweep.
     // r14: the sweep moved from rdd.unpersist() (which left the
     // CacheManager REGISTRATION behind, silently turning every later
     // same-canonical-plan persist into a dead no-op — er3/er4 after er2,
@@ -80,8 +80,7 @@ object Bench {
       val rows = try Some(fn(spark, sfDir).count())
         catch { case _: Throwable => None }
       val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftCaches.sweepExcept(spark,
-        graft.blocks.FixtureSource.cachedFrames)
+      org.apache.spark.sql.GraftCaches.sweepExcept(spark, Nil)
       name -> (dt, rows)
     }
     // seconds and output row counts of the queries that completed (a

@@ -17,7 +17,7 @@ object Verify {
     // single-session dump those caches would otherwise accumulate and force
     // LRU churn for every later query — free each query's caches (blocks
     // AND CacheManager registration, so later same-plan persists still
-    // work) once its dump lands, keeping the shared fixture relations
+    // work) once its dump lands
     selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
@@ -27,8 +27,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      org.apache.spark.sql.GraftCaches.sweepExcept(spark,
-        graft.blocks.FixtureSource.cachedFrames)
+      org.apache.spark.sql.GraftCaches.sweepExcept(spark, Nil)
     }
     // fitted-model dumps: the oracle replays sim5/sim7's post-fit stages in
     // SQL from these relations (written INSIDE each query's dir so the

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
   * (`es-api-model/src/main/resources/tendermint-v0.34.12-rpc-openapi-FIXED.yaml`)
   * with one deliberate deviation: heights/counts arrive as JSON *strings* in
   * the real RPC (`"height": "2270370"`) and are kept StringType here, cast to
-  * Long at the raw-table boundary ([[FixtureSource]] / the blockfeed
-  * connector).
+  * Long at the raw-table boundary (the blockfeed connector's
+  * `graft.sources.RowCodec`, and [[FixtureSource.blockMetas]] for S3).
   *
   * One nullable-everywhere rule: every field is nullable (PERMISSIVE reads),
   * defaults are applied in [[EventTables]] exactly where the reference applies
@@ -119,25 +119,11 @@ object BlockSchemas {
       StructField("last_height", StringType),
       StructField("block_metas", ArrayType(blockMeta)))))))
 
-  /** Websocket `NewBlock` push envelope (`stream/NewBlockResult.kt:14`). */
-  val newBlockEnvelope: StructType = StructType(Seq(
-    StructField("jsonrpc", StringType),
-    StructField("result", StructType(Seq(
-      StructField("query", StringType),
-      StructField("data", StructType(Seq(
-        StructField("type", StringType),
-        StructField("value", StructType(Seq(
-          StructField("block", block),
-          StructField("result_begin_block", StructType(Seq(
-            StructField("events", ArrayType(abciEvent))))),
-          StructField("result_end_block", StructType(Seq(
-            StructField("events", ArrayType(abciEvent))))))))))))))))
-
   /** The engine's canonical raw row: one row per height, `/block` and
     * `/block_results` merged (the reference's `BlockData`,
     * `clients/BlockFetcher.kt:26`) plus derived convenience columns. This is
-    * the output schema of both the fixture batch reader and the blockfeed
-    * DSv2 connector; everything downstream ([[EventTables]]) starts here.
+    * the output schema of the blockfeed DSv2 connector, over every
+    * transport; everything downstream ([[EventTables]]) starts here.
     */
   val raw: StructType = StructType(Seq(
     StructField("height", LongType, nullable = false),

@@ -2,13 +2,17 @@ package graft.queries
 
 import graft.{GQuery, QueryPack}
 import graft.blocks._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-facing queries over the reference's golden block fixtures — the
-  * event-stream core exercised end-to-end through the engine (scan → merge →
-  * explode → decode → filter → agg). Oracles run DuckDB's JSON reader over
-  * the SAME template files, so these are genuinely independent recomputations
-  * of the reference semantics (not rows-only smoke checks).
+  * event-stream core exercised end-to-end through the engine (connector
+  * scan → decode → explode → filter → agg). Every block relation is a
+  * `blockfeed` read: the file transport over the corpus for the batch
+  * queries, the HTTP, ws and gRPC stub nodes for the st gates. Oracles run
+  * DuckDB's JSON reader over the SAME template files, so these are
+  * genuinely independent recomputations of the reference semantics (not
+  * rows-only smoke checks).
   *
   * `sfDir` is ignored: these operators' input is the block fixture corpus
   * (FIXTURES.md §A), not the synthetic star schema.
@@ -40,9 +44,21 @@ object Blocks extends QueryPack {
       }.mkString(",\n        ")
     }
 
+  private def feed(s: SparkSession, opts: (String, String)*): DataFrame = {
+    val r = s.read.format("blockfeed").option("path", T)
+    opts.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
+  }
+
+  /** Raw rows ([[BlockSchemas.raw]]) of heights [From, `to`] through the
+    * `blockfeed` connector's file transport; `historical` is `height <=`
+    * the corpus's abci tip, as on every transport.
+    */
+  private[queries] def raw(s: SparkSession, to: Long = To): DataFrame =
+    feed(s, "from" -> From.toString, "to" -> to.toString)
+
   val s1Scan = GQuery(
     "s1_block_scan",
-    (s, _) => EventTables.blocks(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.blocks(raw(s))
       .select("height", "chain_id", "time", "num_txs", "is_empty"),
     Some(s"""
       SELECT CAST(result.block.header.height AS BIGINT) AS height,
@@ -55,7 +71,7 @@ object Blocks extends QueryPack {
 
   val e1TxEventsByType = GQuery(
     "e1_tx_events_by_type",
-    (s, _) => EventTables.txEvents(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.txEvents(raw(s))
       .groupBy("event_type").agg(count(lit(1)).as("n_events")),
     Some(s"""
       WITH br AS (
@@ -69,7 +85,7 @@ object Blocks extends QueryPack {
 
   val e2BlockEventsByType = GQuery(
     "e2_block_events_by_type",
-    (s, _) => EventTables.blockEvents(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.blockEvents(raw(s))
       .groupBy("event_type").agg(count(lit(1)).as("n_events")),
     Some(s"""
       WITH br AS (
@@ -86,7 +102,7 @@ object Blocks extends QueryPack {
     */
   val f10AttrKeys = GQuery(
     "f10_attr_key_histogram",
-    (s, _) => EventTables.blockEvents(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.blockEvents(raw(s))
       .select(explode(col("attributes")).as("a"))
       .select(BlockOps.b64ToUtf8(col("a.key")).as("attr_key"))
       .groupBy("attr_key").agg(count(lit(1)).as("n")),
@@ -100,13 +116,15 @@ object Blocks extends QueryPack {
       SELECT decode(from_base64(a.key)) AS attr_key, COUNT(*) AS n
       FROM attr GROUP BY 1"""))
 
-  /** S12–S14 combined history+live with provenance flags, expressed from the
-    * driver side as: all block heights, `historical` = ≤ the abci_info current
-    * height (3028985 in the fixture template default).
+  /** S12–S14 combined history+live with provenance flags, as one batch
+    * read with no upper bound: every block height from `From` on, the
+    * connector flagging `historical` = ≤ the abci_info current height
+    * (3028985 in the fixture template default). It plans each height once,
+    * so the history and live heights need no dedup.
     */
   val s13Combined = GQuery(
     "s13_combined_stream",
-    (s, _) => EventTables.blocks(FixtureSource.combinedRaw(s, T, From))
+    (s, _) => EventTables.blocks(raw(s, to = Long.MaxValue))
       .select("height", "num_txs", "historical"),
     Some(s"""
       SELECT CAST(result.block.header.height AS BIGINT) AS height,
@@ -121,7 +139,7 @@ object Blocks extends QueryPack {
     "p2_filter_by_event_type",
     (s, _) => EventTables.blocks(
       EventTables.filterByEvents(
-        FixtureSource.blocksRaw(s, T, From, To), Seq("transfer"), Nil))
+        raw(s), Seq("transfer"), Nil))
       .select("height", "num_txs"),
     Some(s"""
       WITH br AS (
@@ -164,7 +182,7 @@ object Blocks extends QueryPack {
     "p1_skip_empty_blocks",
     (s, _) => EventTables.blocks(
       EventTables.filterNonEmpty(
-        FixtureSource.blocksRaw(s, T, From, To), skipEmpty = true))
+        raw(s), skipEmpty = true))
       .select("height", "num_txs"),
     Some(s"""
       SELECT CAST(result.block.header.height AS BIGINT) AS height,
@@ -180,7 +198,7 @@ object Blocks extends QueryPack {
     */
   val e3TxErrors = GQuery(
     "e3_tx_errors",
-    (s, _) => EventTables.txErrors(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.txErrors(raw(s))
       .select("block_height", "code", "info"),
     Some(s"""
       WITH br AS (
@@ -208,7 +226,7 @@ object Blocks extends QueryPack {
     */
   val f4TxHashes = GQuery(
     "f4_tx_hashes",
-    (s, _) => FixtureSource.blocksRaw(s, T, From, To)
+    (s, _) => raw(s)
       .filter(size(coalesce(col("block.data.txs"), array())) > 0)
       .select(
         col("height"),
@@ -372,7 +390,7 @@ object Blocks extends QueryPack {
     */
   val p6Nth = GQuery(
     "p6_nth_block_sample",
-    (s, _) => EventTables.blocks(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.blocks(raw(s))
       .filter(col("height") % 10 === 0)
       .select("height", "num_txs"),
     Some(s"""
@@ -398,7 +416,7 @@ object Blocks extends QueryPack {
     */
   val f13Fees = GQuery(
     "f13_tx_fees_by_denom",
-    (s, _) => EventTables.txs(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => EventTables.txs(raw(s))
       .select(col("height"), col("tx_index"), col("tx_meta"))
       .distinct()
       .groupBy(col("tx_meta.feeDenom").as("denom"))
@@ -413,16 +431,9 @@ object Blocks extends QueryPack {
         ${oracleRows("('nhash', 577601383530, 75)", "fees_by_denom")})
         AS t(denom, total_fee, n_txs)"""))
 
-  // === the same semantics THROUGH the DSv2 connector ==================
-  // These put the blockfeed connector's batch machinery — partition
-  // planning, height pushdown, meta-mode column pruning, the executor-side
-  // readers — on the driver's oracle gate, not only on specs.
-
-  private def feed(s: org.apache.spark.sql.SparkSession,
-                   opts: (String, String)*): org.apache.spark.sql.DataFrame = {
-    val r = s.read.format("blockfeed").option("path", T)
-    opts.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
-  }
+  // === the connector's own batch machinery ============================
+  // Meta-mode column pruning, explicit height lists and multi-partition
+  // planning on the driver's oracle gate, not only on specs.
 
   /** S1/S3 via the connector: the meta-safe projection flips the scan to the
     * cheap 20-height `/blockchain` page path (column pruning, §4).
@@ -672,7 +683,8 @@ object Blocks extends QueryPack {
       } finally {
         stub.stop()
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
+        scala.util.Using.resource(java.nio.file.Files.walk(tmp))(
+          _.iterator().asScala.toList).reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     },

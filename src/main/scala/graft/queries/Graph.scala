@@ -233,14 +233,18 @@ object Graph extends QueryPack {
         .persist()
       var dist = s.range(1)
         .select(lit(3L).as("node"), lit(0L).as("cost_mi"))
-      for (_ <- 1 to 4) {
+      for (round <- 1 to 4) {
         // dist appears twice per round (carry-over ∪ relaxation), so cut
         // the lineage each round — without this the self-reference doubles
         // the uncached plan per iteration (2^rounds recomputation), the
         // same reason ConnectedComponents checkpoints its labels.
+        // Round 1's frontier is the literal source row: the optimizer folds
+        // the key into a `u = 3` filter on the cached edges, so that join
+        // has no equi key for a shuffle_hash hint and broadcasts the one
+        // row instead.
+        val frontier = if (round == 1) dist else dist.hint("shuffle_hash")
         dist = dist.union(
-            edges.join(dist.hint("shuffle_hash"),
-              edges("u") === dist("node"))
+            edges.join(frontier, edges("u") === frontier("node"))
               .select(col("v").as("node"),
                 (col("cost_mi") + col("w")).as("cost_mi")))
           .groupBy(col("node"))

@@ -22,7 +22,7 @@ object Sinks extends QueryPack {
     */
   val k2Manifest = GQuery(
     "k2_file_manifest",
-    (s, _) => BlockSinks.fileFrames(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => BlockSinks.fileFrames(Blocks.raw(s))
       .select(col("height"), col("rel_path")),
     Some(s"""
       SELECT CAST(result.block.header.height AS BIGINT) AS height,
@@ -35,7 +35,7 @@ object Sinks extends QueryPack {
   /** K4: Kafka record keys `"<chainId>.<height>"` (`KafkaBlockSink.kt:30`). */
   val k4Keys = GQuery(
     "k4_kafka_keys",
-    (s, _) => BlockSinks.kafkaFrames(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => BlockSinks.kafkaFrames(Blocks.raw(s))
       .select(col("key").cast("string").as("kafka_key")),
     Some(s"""
       SELECT result.block.header.chain_id || '.' ||
@@ -49,7 +49,7 @@ object Sinks extends QueryPack {
     */
   val e6StreamBlock = GQuery(
     "e6_stream_block_assembly",
-    (s, _) => BlockSinks.streamBlocks(FixtureSource.blocksRaw(s, T, From, To))
+    (s, _) => BlockSinks.streamBlocks(Blocks.raw(s))
       .select(
         col("height"),
         size(col("blockEvents")).as("n_block_events"),
@@ -89,7 +89,7 @@ object Sinks extends QueryPack {
   val k5Roundtrip = GQuery(
     "k5_kafka_roundtrip",
     (s, _) => {
-      val frames = BlockSinks.kafkaFrames(FixtureSource.blocksRaw(s, T, From, To))
+      val frames = BlockSinks.kafkaFrames(Blocks.raw(s))
       BlockSinks.decodeKafkaFrames(frames, s)
         .select(
           col("height"),

@@ -340,9 +340,10 @@ object StreamGate extends QueryPack {
         import scala.jdk.CollectionConverters._
         val tmp = stage.resolve("_ranged")
         ev0.repartitionByRange(2, col("ts")).write.parquet(tmp.toString)
-        val parts = java.nio.file.Files.list(tmp).iterator().asScala
+        val parts = scala.util.Using.resource(java.nio.file.Files.list(tmp))(
+            _.iterator().asScala.toList)
           .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
+          .sortBy(_.getFileName.toString)
         require(parts.size == 2,
           s"expected 2 range files, got ${parts.size} — empty range?")
         parts.zipWithIndex.foreach { case (part, i) =>
@@ -361,7 +362,8 @@ object StreamGate extends QueryPack {
       } finally {
         // the drained memory sink no longer needs the staged files
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(stage).iterator().asScala.toSeq.reverse
+        scala.util.Using.resource(java.nio.file.Files.walk(stage))(
+          _.iterator().asScala.toList).reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     },
@@ -442,8 +444,9 @@ object StreamGate extends QueryPack {
           require(java.nio.file.Files.isDirectory(d),
             s"st5c slice $i is empty — the derived cuts no longer " +
               "produce three non-empty files on this data")
-          val parts = java.nio.file.Files.list(d).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+          val parts = scala.util.Using.resource(java.nio.file.Files.list(d))(
+              _.iterator().asScala.toList)
+            .filter(_.getFileName.toString.endsWith(".parquet"))
           require(parts.size == 1,
             s"st5c slice $i staged ${parts.size} files; the one-batch-per-" +
               "slice premise needs exactly one")
@@ -461,7 +464,8 @@ object StreamGate extends QueryPack {
         watchdogDrain(s, ev, "st5c_alerts", silenceMs)
       } finally {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(stage).iterator().asScala.toSeq.reverse
+        scala.util.Using.resource(java.nio.file.Files.walk(stage))(
+          _.iterator().asScala.toList).reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     },

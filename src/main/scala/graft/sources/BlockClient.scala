@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Transport abstraction under the blockfeed connector — the reference's
   * `NetAdapter` (`net/NetAdapter.kt:24`) reduced to the four RPCs the engine
@@ -141,7 +142,7 @@ final class FileBlockClient(dir: String) extends BlockClient {
   // files exist (the denseBelowTip scaladoc's ws-planning rationale)
   override def denseBelowTip: Boolean = false
 
-  private def readFile(p: java.nio.file.Path): String =
+  private def readFile(p: Path): String =
     new String(Files.readAllBytes(p), "UTF-8")
 
   // template resolution + height extraction live in FixtureSource (the one
@@ -150,16 +151,20 @@ final class FileBlockClient(dir: String) extends BlockClient {
   override def currentHeight(): Long =
     graft.blocks.FixtureSource.currentHeight(dir)
 
-  override def availableHeights(from: Long, to: Long): Seq[Long] = {
-    val d = Paths.get(s"$dir/block")
+  /** The entries of directory `d` (closed before returning: an open
+    * listing holds a file descriptor until the stream is closed, and every
+    * block-query plan and file-transport trigger lists). */
+  private def list(d: Path): Seq[Path] =
     if (!Files.isDirectory(d)) Seq.empty
-    else Files.list(d).iterator().asScala
+    else Using.resource(Files.list(d))(_.iterator().asScala.toList)
+
+  override def availableHeights(from: Long, to: Long): Seq[Long] =
+    list(Paths.get(s"$dir/block"))
       .map(_.getFileName.toString)
       .collect { case n if n.endsWith(".json") => n.stripSuffix(".json") }
       .flatMap(n => scala.util.Try(n.toLong).toOption)
       .filter(h => h >= from && h <= to)
-      .toSeq.sorted
-  }
+      .sorted
 
   private def opt(path: String): Option[String] = {
     val p = Paths.get(path)
@@ -172,10 +177,8 @@ final class FileBlockClient(dir: String) extends BlockClient {
   override def blockResults(height: Long): Option[String] =
     opt(s"$dir/block_results/$height.json")
 
-  override def metaPages(from: Long, to: Long): Seq[String] = {
-    val d = Paths.get(s"$dir/blockchain")
-    if (!Files.isDirectory(d)) Seq.empty
-    else Files.list(d).iterator().asScala
+  override def metaPages(from: Long, to: Long): Seq[String] =
+    list(Paths.get(s"$dir/blockchain"))
       .filter(_.getFileName.toString.endsWith(".json"))
       .flatMap { p =>
         p.getFileName.toString.stripSuffix(".json").split("-") match {
@@ -189,9 +192,8 @@ final class FileBlockClient(dir: String) extends BlockClient {
       }
       // prefer the widest pages (the fixture dir has 4-height and 20-height
       // views of the same ranges); readers dedup by height anyway
-      .toSeq.sortBy { case (l, h, _) => (l, -(h - l)) }
+      .sortBy { case (l, h, _) => (l, -(h - l)) }
       .map { case (_, _, p) => readFile(p) }
-  }
 }
 
 /** Live-node transport: Tendermint HTTP RPC (URI endpoints `abci_info`,

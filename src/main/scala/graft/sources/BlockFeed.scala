@@ -57,6 +57,8 @@ object BlockFeed {
 
   /** `heightsPerPartition` default = reference `DEFAULT_BATCH_SIZE`. */
   val DefaultHeightsPerPartition = 128
+  /** `maxHeightsPerTrigger` default = the reference's 10k live buffer. */
+  val DefaultMaxHeightsPerTrigger = 10000
   /** `retryBaseWaitMs` default = reference `Backoff.kt:12` base. */
   val DefaultRetryBaseWaitMs = 1000L
 
@@ -67,19 +69,38 @@ object BlockFeed {
     */
   def client(path: String, retryBaseWaitMs: Long): BlockClient =
     new RetryingBlockClient(BlockClient.open(path), baseWaitMillis = retryBaseWaitMs)
+
+  /** The sizing options, parsed once when the table loads. */
+  final case class Sizing(heightsPerPartition: Int, maxHeightsPerTrigger: Int)
+
+  /** Both sizing options must be at least 1: planning groups heights by
+    * `heightsPerPartition`, and a trigger that may admit no height never
+    * advances the stream.
+    */
+  def sizing(options: CaseInsensitiveStringMap): Sizing = {
+    def positive(name: String, default: Int): Int = {
+      val v = options.getInt(name, default)
+      if (v < 1) throw new IllegalArgumentException(
+        s"blockfeed option $name must be at least 1, got $v")
+      v
+    }
+    Sizing(positive("heightsPerPartition", DefaultHeightsPerPartition),
+      positive("maxHeightsPerTrigger", DefaultMaxHeightsPerTrigger))
+  }
 }
 
 class BlockFeedTable(options: CaseInsensitiveStringMap)
   extends Table with SupportsRead {
+  private val sizing = BlockFeed.sizing(options)
   override def name(): String = s"blockfeed(${options.get("path")})"
   override def schema(): StructType = BlockSchemas.raw
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new BlockFeedScanBuilder(opts)
+    new BlockFeedScanBuilder(opts, sizing)
 }
 
-class BlockFeedScanBuilder(options: CaseInsensitiveStringMap)
+class BlockFeedScanBuilder(options: CaseInsensitiveStringMap, sizing: BlockFeed.Sizing)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
@@ -127,15 +148,16 @@ class BlockFeedScanBuilder(options: CaseInsensitiveStringMap)
   }
 
   override def build(): Scan =
-    new BlockFeedScan(options, requiredSchema, minHeight, maxHeight, minNumTxs)
+    new BlockFeedScan(options, sizing, requiredSchema, minHeight, maxHeight, minNumTxs)
 }
 
 final case class HeightRangePartition(
     heights: Array[Long], historicalBelow: Long, metaMode: Boolean)
   extends InputPartition
 
-class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
-                    minHeight: Long, maxHeight: Long, minNumTxs: Int)
+class BlockFeedScan(options: CaseInsensitiveStringMap, sizing: BlockFeed.Sizing,
+                    required: StructType, minHeight: Long, maxHeight: Long,
+                    minNumTxs: Int)
   extends Scan {
 
   private val path = options.get("path")
@@ -149,9 +171,6 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
 
   /** Header/meta-only scans take the cheap `/blockchain`-page path. */
   val metaMode: Boolean = prunedOrdinals.forall(BlockFeed.MetaSafeOrdinals.contains)
-
-  private val heightsPerPartition =
-    options.getInt("heightsPerPartition", BlockFeed.DefaultHeightsPerPartition)
 
   override def readSchema(): StructType = required
   override def description(): String =
@@ -185,7 +204,7 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
         case None => inRange
       }
       heights
-        .grouped(heightsPerPartition)
+        .grouped(sizing.heightsPerPartition)
         .map(hs => HeightRangePartition(hs.toArray, cur, metaMode))
         .toArray[InputPartition]
     }
@@ -195,7 +214,8 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BlockFeedMicroBatch(path, options, prunedOrdinals, metaMode, minNumTxs)
+    new BlockFeedMicroBatch(path, options, sizing, prunedOrdinals, metaMode,
+      minNumTxs)
 }
 
 /** Micro-batch stream over heights: `latestOffset(start, limit)` = node tip,
@@ -204,8 +224,8 @@ class BlockFeedScan(options: CaseInsensitiveStringMap, required: StructType,
   * contract; `maxHeightsPerTrigger` plays the 10k live buffer's role, T6).
   */
 class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
-                          prunedOrdinals: Array[Int], metaMode: Boolean,
-                          minNumTxs: Int)
+                          sizing: BlockFeed.Sizing, prunedOrdinals: Array[Int],
+                          metaMode: Boolean, minNumTxs: Int)
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   private val retryBaseWaitMs =
@@ -215,9 +235,6 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
     * (reference `combinedFlow` captures the same thing, `MultiplexFlow.kt:88`).
     */
   private val startCurrentHeight = client.currentHeight()
-  private val maxPerTrigger = options.getInt("maxHeightsPerTrigger", 10000)
-  private val heightsPerPartition =
-    options.getInt("heightsPerPartition", BlockFeed.DefaultHeightsPerPartition)
   private val from: Long = Option(options.get("from")) match {
     case Some("latest") => startCurrentHeight + 1
     case Some(v) => v.toLong
@@ -274,7 +291,7 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
 
   override def initialOffset(): Offset = HeightOffset(startFloor - 1)
 
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerTrigger)
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(sizing.maxHeightsPerTrigger)
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(tip)
@@ -293,12 +310,12 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
     val s = start.asInstanceOf[HeightOffset].height
     // Trigger.Once hands the source ReadLimit.allAvailable(): Spark
     // explicitly IGNORES the default read limit there, so clamping the
-    // everything-limit back to maxPerTrigger would silently truncate a
+    // everything-limit back to maxHeightsPerTrigger would silently truncate a
     // one-shot run at maxHeightsPerTrigger heights and terminate
     val cap = limit match {
       case m: ReadMaxRows => m.maxRows()
       case _: ReadAllAvailable => Long.MaxValue
-      case _ => maxPerTrigger.toLong
+      case _ => sizing.maxHeightsPerTrigger.toLong
     }
     if (wsArithmetic) {
       // dense below the pushed tip: advance arithmetically, no RPC
@@ -341,7 +358,7 @@ class BlockFeedMicroBatch(path: String, options: CaseInsensitiveStringMap,
         else client.availableHeights(s + 1, e)
       }
     heights
-      .grouped(heightsPerPartition)
+      .grouped(sizing.heightsPerPartition)
       .map(h => HeightRangePartition(h.toArray, startCurrentHeight, metaMode))
       .toArray[InputPartition]
   }
@@ -371,7 +388,8 @@ class BlockFeedReaderFactory(path: String, prunedOrdinals: Array[Int],
   * meta mode decodes the shared 20-height pages (a transport without a
   * paged RPC, gRPC, serves none, so every height takes the per-height
   * `/block` backstop with no results RPC). Missing `block_results`
-  * degrade to null event columns (left-join parity with the batch path).
+  * degrade to null event columns (a left join of `/block` with
+  * `/block_results`).
   */
 class BlockFeedPartitionReader(client: BlockClient, p: HeightRangePartition,
                                prunedOrdinals: Array[Int], minNumTxs: Int,

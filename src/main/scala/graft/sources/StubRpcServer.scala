@@ -165,7 +165,7 @@ final class StubRpcServer(dir: String,
               else {
                 val d = Paths.get(s"$dir/blockchain")
                 import scala.jdk.CollectionConverters._
-                Files.list(d).iterator().asScala
+                scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toList)
                   .flatMap { p =>
                     p.getFileName.toString.stripSuffix(".json").split("-") match {
                       case Array(a, b) =>
@@ -175,7 +175,7 @@ final class StubRpcServer(dir: String,
                         }
                       case _ => None
                     }
-                  }.toSeq.sortBy(-_._1).headOption.map(_._2)
+                  }.sortBy(-_._1).headOption.map(_._2)
               }
             page match {
               case Some(p) =>

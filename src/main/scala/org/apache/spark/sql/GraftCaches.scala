@@ -17,17 +17,16 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   * [[sweepExcept]] removes the registrations themselves via
   * `CacheManager.uncacheQuery` (which also unpersists), so a later
-  * re-persist of the same canonical plan WORKS again. `keep` relations
-  * (the per-session fixture caches every block query shares) are matched
-  * by `sameResult`, never by identity, so a keep handle protects its
-  * canonical twin entries too.
+  * re-persist of the same canonical plan WORKS again. `keep` relations are
+  * matched by `sameResult`, never by identity, so a keep handle protects
+  * its canonical twin entries too. `graft.Bench` and `graft.Verify` keep
+  * nothing.
   *
   * The only non-public surface touched is the enumeration of current
   * entries (`CacheManager.cachedData` is class-private — read
   * reflectively). If that field moves in a future Spark, the sweep falls
-  * back to `clearCache()`: correctness unchanged, and the fixture caches
-  * self-heal on next access (FixtureSource re-persists a memoized relation
-  * whose storage level was cleared).
+  * back to `clearCache()`, which drops the `keep` entries too: each query
+  * still persists what it needs itself, so results are unchanged.
   */
 object GraftCaches {
 

@@ -26,7 +26,7 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Session.builder("graft-test").getOrCreate()
   override def afterAll(): Unit = () // shared JVM session; Spark stops at exit
 
-  lazy val raw = FixtureSource.blocksRaw(spark, T, From, To).cache()
+  lazy val raw = Fixture.raw(spark, From, To).cache()
 
   test("historical scan yields 100 blocks, 29 non-empty (S1/P1)") {
     assert(raw.count() === 100L)
@@ -145,7 +145,7 @@ class BlockCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("combined history+live = 106, dedup'd, provenance flags (S12-S14/T2)") {
-    val combined = FixtureSource.combinedRaw(spark, T, From)
+    val combined = Fixture.raw(spark, From, Long.MaxValue)
     assert(combined.count() === 106L)
     assert(combined.filter(col("historical")).count() === 100L)
     assert(combined.filter(!col("historical")).count() === 6L)

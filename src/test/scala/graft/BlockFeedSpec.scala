@@ -330,7 +330,8 @@ class BlockFeedSpec extends AnyFunSuite {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val got = spark.table("bf_txev")
-    val batch = EventTables.txEvents(FixtureSource.combinedRaw(spark, T, 2270370L))
+    val batch = EventTables.txEvents(
+        read("from" -> "2270370", "to" -> Long.MaxValue.toString))
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     assert(got.except(batch).count() === 0L)
     assert(batch.except(got).count() === 0L)
@@ -428,7 +429,7 @@ class BlockFeedSpec extends AnyFunSuite {
     // every one of the 106 combined blocks lands in exactly one window
     assert(got.agg(sum(col("n_blocks"))).head().getLong(0) === 106L)
     // streaming result ≡ the same window agg computed in batch (S12 path)
-    val batch = FixtureSource.combinedRaw(spark, T, 2270370L)
+    val batch = read("from" -> "2270370", "to" -> Long.MaxValue.toString)
       .groupBy(window(col("time"), "1 minute"))
       .agg(count(lit(1)).as("n_blocks"), max(col("height")).as("max_height"))
       .select(col("window.start").as("ws"), col("n_blocks"), col("max_height"))
@@ -501,5 +502,38 @@ class BlockFeedSpec extends AnyFunSuite {
         read("from" -> "2270370", "to" -> "2270389")
           .filter(col("num_txs") > 0).count())
     } finally TestDirs.deleteRecursively(root)
+  }
+
+  test("non-positive heightsPerPartition / maxHeightsPerTrigger fail at load, naming the option") {
+    // heightsPerPartition=0 used to die in Seq.grouped with no mention of
+    // the option; maxHeightsPerTrigger=0 planned empty triggers forever
+    for (name <- Seq("heightsPerPartition", "maxHeightsPerTrigger");
+         v <- Seq("0", "-1")) {
+      val batch = intercept[IllegalArgumentException](
+        read("from" -> "2270370", "to" -> "2270469", name -> v))
+      val stream = intercept[IllegalArgumentException](
+        spark.readStream.format("blockfeed").option("path", T)
+          .option("from", "2270370").option(name, v).load())
+      for (e <- Seq(batch, stream))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"got $v"),
+          e.getMessage)
+    }
+  }
+
+  test("file transport listings close their directory streams") {
+    // availableHeights and metaPages run on every block-query plan and
+    // every file-transport trigger; an unclosed Files.list held one file
+    // descriptor per call until the JVM exited
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val c = new graft.sources.FileBlockClient(T)
+    val before = os.getOpenFileDescriptorCount
+    (1 to 300).foreach(_ => c.availableHeights(1L, Long.MaxValue))
+    val afterHeights = os.getOpenFileDescriptorCount
+    (1 to 300).foreach(_ => c.metaPages(2270370L, 2270469L))
+    val afterPages = os.getOpenFileDescriptorCount
+    // slack for descriptors other threads of this JVM open meanwhile
+    assert(afterHeights - before < 50, s"availableHeights: $before -> $afterHeights")
+    assert(afterPages - afterHeights < 50, s"metaPages: $afterHeights -> $afterPages")
   }
 }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 
-import graft.blocks.FixtureSource
 import graft.sinks.{BlockFilesWriter, BlockSinks}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -26,7 +25,7 @@ class BlockFilesChainSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Heights = 60L
   private val root = Files.createTempDirectory("k2chain")
   private lazy val chain = TestChain.write(root.resolve("chain"), Heights).toString
-  private def raw = FixtureSource.blocksRaw(spark, chain, 1L, Heights)
+  private def raw = Fixture.raw(spark, 1L, Heights, chain)
 
   override def afterAll(): Unit = TestDirs.deleteRecursively(root, retries = 3)
 
@@ -70,9 +69,7 @@ class BlockFilesChainSpec extends AnyFunSuite with BeforeAndAfterAll {
     BlockSinks.fileSink(ordered, ordered = true)(raw, 0L)
     val kafka = newDir("kafka")
     BlockSinks.kafkaFileSink(kafka, spark)(BlockSinks.kafkaFrames(raw), 0L)
-    // a derived frame, so its storage level is the sink's doing, not the
-    // fixture cache's
-    val batch = raw.filter(col("height") >= 1L)
+    val batch = raw
     val levels = scala.collection.mutable.ArrayBuffer.empty[StorageLevel]
     val seen = new java.util.concurrent.atomic.AtomicLong
     val fanOut = newDir("fanout")

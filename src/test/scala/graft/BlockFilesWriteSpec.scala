@@ -19,8 +19,7 @@ class BlockFilesWriteSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = Session.builder("bfw-test").getOrCreate()
   private val T = FixtureSource.DefaultTemplates
-  private def frames = BlockSinks.fileFrames(
-    FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L))
+  private def frames = BlockSinks.fileFrames(Fixture.raw(spark, 2270370L, 2270469L))
 
   private def listFiles(dir: String): Map[String, String] =
     Files.walk(Paths.get(dir)).iterator().asScala
@@ -75,8 +74,7 @@ class BlockFilesWriteSpec extends AnyFunSuite {
     val files = listFiles(dir)
     assert(files.size === 100)
     // replayed/extended run wrote each height exactly once, bytes intact
-    val expect = BlockSinks.fileFrames(
-      FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L))
+    val expect = BlockSinks.fileFrames(Fixture.raw(spark, 2270370L, 2270469L))
       .select(col("height")).collect().map(_.getLong(0)).toSet
     assert(files.keySet.map(_.split("/")(1).stripSuffix(".json").toLong) === expect)
   }

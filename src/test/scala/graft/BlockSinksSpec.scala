@@ -1,6 +1,5 @@
 package graft
 
-import graft.blocks.FixtureSource
 import graft.sinks.BlockSinks
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -12,13 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class BlockSinksSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = Session.get("sinks-spec")
-  private val T = FixtureSource.DefaultTemplates
   private val From = 2270370L
   private val To = 2270469L
 
   override def afterAll(): Unit = spark.stop()
 
-  private def raw = FixtureSource.blocksRaw(spark, T, From, To)
+  private def raw = Fixture.raw(spark, From, To)
 
   test("K2 file layout matches the reference sha-splay scheme") {
     val row = BlockSinks.fileFrames(raw)

@@ -2,6 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.blocks.FixtureSource
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The expected values the fixture-backed specs assert, from one place.
   *
@@ -22,6 +23,13 @@ object Fixture {
 
   private val dir: String = FixtureSource.DefaultTemplates
   private val golden: Boolean = dir == FixtureSource.ReferenceTemplates
+
+  /** Raw block rows of heights [from, to] in `corpus`, read through the
+    * `blockfeed` connector's file transport. */
+  def raw(spark: SparkSession, from: Long, to: Long,
+          corpus: String = dir): DataFrame =
+    spark.read.format("blockfeed").option("path", corpus)
+      .option("from", from.toString).option("to", to.toString).load()
 
   private lazy val manifest: JsonNode =
     new ObjectMapper().readTree(new java.io.File(s"$dir/manifest.json"))

@@ -56,7 +56,7 @@ class GrpcBlockFeedSpec extends AnyFunSuite {
       // transport's. Count equality + one-direction multiset containment ⇒
       // equality; the count is what makes this non-vacuous (a misroute
       // empties df's end list, and empty.exceptAll(x) is 0 rows)
-      val viaFile = FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L)
+      val viaFile = Fixture.raw(spark, 2270370L, 2270469L)
       def endTypes(d: org.apache.spark.sql.DataFrame) =
         d.select(explode(col("end_block_events")).as("e")).select(col("e.type"))
       val expectedEnd = endTypes(viaFile).count()

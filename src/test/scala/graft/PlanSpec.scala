@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape gates: the properties that make the 100 TB story
@@ -627,5 +633,62 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Generate"), s"bounded explode missing:\n$p")
     assert(!p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"),
       s"dau×wau join shape degraded:\n$p")
+  }
+
+  test("g3: round 1 broadcasts the literal source row; rounds 2-4 are shuffled-hash joins") {
+    // every relaxation round is an eager localCheckpoint and the returned
+    // plan reads round 4's checkpoint, so the rounds' join strategies are
+    // read off the four checkpoint executions, in order
+    val rounds = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") rounds.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plans = try {
+      SparkEntry.queries("g3_cheapest_path")(spark, dir)
+      Seq.fill(4)(rounds.poll(60, TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.contains(null), s"expected 4 relaxation rounds, saw ${plans.count(_ != null)}")
+    // round 1: `u = 3` is a filter on the cached edges, and the one-row
+    // frontier broadcasts; no hint asks for a hash join it cannot have
+    assert(plans.head.contains("BroadcastNestedLoopJoin") &&
+      !plans.head.contains("ShuffledHashJoin"), plans.head)
+    for (p <- plans.tail)
+      assert(p.contains("ShuffledHashJoin") && !p.contains("NestedLoopJoin"), p)
+  }
+
+  test("sim7/sim17: the corpus reaches the ADC projection unexploded, never shuffled on vec_id") {
+    for (q <- Seq("sim7_knn_pq_adc", "sim17_knn_ivfpq")) {
+      val p = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+      // the one posexplode left splits the 10 query vectors into the LUT's
+      // subvectors (the KB-scale model side), not the scanned corpus
+      val queryOnly = "vec_id#\\d+L < 10\\)".r
+      val generates = p.collect { case g: GenerateExec => g }
+      assert(generates.forall(_.child.exists {
+        case f: FilterExec => queryOnly.findFirstIn(f.condition.toString).isDefined
+        case _ => false
+      }), s"$q: a posexplode reads more than the query rows:\n$p")
+      val onVecId = p.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("vec_id#") => e
+      }
+      assert(onVecId.isEmpty, s"$q: an Exchange is keyed on vec_id:\n$p")
+    }
+  }
+
+  test("block and sink queries plan a blockfeed BatchScan, never a cached or JSON scan") {
+    for (q <- Seq("s1_block_scan", "e1_tx_events_by_type", "e2_block_events_by_type",
+        "f10_attr_key_histogram", "s13_combined_stream", "p2_filter_by_event_type",
+        "p1_skip_empty_blocks", "e3_tx_errors", "f4_tx_hashes", "p6_nth_block_sample",
+        "f13_tx_fees_by_denom", "k2_file_manifest", "k4_kafka_keys",
+        "e6_stream_block_assembly", "k5_kafka_roundtrip")) {
+      val p = plan(q)
+      assert(p.contains("BatchScan blockfeed"), s"$q:\n$p")
+      assert(!p.contains("InMemoryTableScan") && !p.contains("Scan json"), s"$q:\n$p")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.blocks.{EventTables, FixtureSource}
+import graft.blocks.EventTables
 import graft.functions.Salt
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -11,11 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SqlSurfaceSpec extends AnyFunSuite {
 
-  private val T = FixtureSource.DefaultTemplates
   private lazy val spark: SparkSession = Session.builder("sql-test").getOrCreate()
 
   test("registered views answer SQL over the full catalog") {
-    EventTables.registerAll(FixtureSource.blocksRaw(spark, T, 2270370L, 2270469L))
+    EventTables.registerAll(Fixture.raw(spark, 2270370L, 2270469L))
     Tables.registerAll(spark, "/root/testdata/sf0.001")
     // fixture ground truths through SQL
     assert(spark.sql("SELECT count(*) FROM blocks").head().getLong(0) === 100L)
