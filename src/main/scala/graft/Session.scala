@@ -45,6 +45,22 @@ import org.apache.spark.sql.SparkSession
   *     in the JVM through NIO's POSIX attributes, so on a POSIX host it
   *     behaves as stock does (`LocalFsSpec` pins the parity); other
   *     schemes (HDFS, S3) keep their own implementations.
+  *   - Session artifact isolation is OFF
+  *     (`spark.sql.artifact.isolation.enabled=false`). Every streaming query
+  *     runs on a `cloneSession()` with a new session UUID, and with
+  *     isolation on each UUID got its own `ExecutorClassLoader` on the
+  *     executors. `CodeGenerator.compile` caches by (context classloader,
+  *     source), so every backfill drain recompiled the same plan with
+  *     Janino (5 compiles per drain of perfbench's ingest shape) and the
+  *     JIT learned the fresh classes again from the interpreter. On a
+  *     4-core host (1000-height drains, medians of drains 2–12) the
+  *     engine's CPU per drain falls 4.7 → 2.9 core-seconds with it off,
+  *     while task CPU moves only 2.0 → 1.7 s: the saving is compile work.
+  *     The engine adds no session artifacts (no `addArtifact`/`addJar`),
+  *     so isolation bought nothing; with it off, every query shares one
+  *     executor classloader, the codegen cache and the JIT's compiled code
+  *     (`CodegenReuseSpec` pins both). A deployment that does ship
+  *     per-session jars must turn it back on and pay the recompile.
   *   - `nanosAsLong`: the synthetic `events` table carries parquet
   *     TIMESTAMP(NANOS), which Spark cannot represent natively; we read it as
   *     Long and convert to micros in [[Tables.load]].
@@ -90,6 +106,9 @@ object Session {
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[ForkFreeLocalFs].getName)
+      // one executor classloader for every query, so streaming drains reuse
+      // generated code: see the scale note above
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

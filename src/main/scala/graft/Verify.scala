@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,10 +21,17 @@ object Verify {
     // work) once its dump lands
     selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
+      // Janino compiles and their time, as deltas of Spark's own codegen
+      // counters, so a sweep log shows a query that starts recompiling
+      val (compiles0, compileNs0) =
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+        System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs" +
+          f" ($compiles codegen compiles, $compileMs%.0f ms)")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

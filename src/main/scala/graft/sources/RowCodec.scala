@@ -18,10 +18,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 final class RowCodec {
 
+  // `useUnsafeRow` pinned off, whatever the session sets: the parser then
+  // returns the GenericInternalRow it built for the record (fresh
+  // UTF8Strings, fresh arrays), so a parsed row is never overwritten by the
+  // next parse and needs no copy (BlockFeedSpec "codec: a decoded row
+  // survives the next decode"). On, Spark 4.1 projects each record to an
+  // UnsafeRow and copies that: one more copy of every payload.
   private def mkParser(schema: StructType): JacksonParser =
     new JacksonParser(
       schema,
-      new JSONOptions(Map("mode" -> "PERMISSIVE"), "UTC", "_corrupt_record"),
+      new JSONOptions(Map("mode" -> "PERMISSIVE", "useUnsafeRow" -> "false"),
+        "UTC", "_corrupt_record"),
       allowArrayAsStructs = false,
       Seq.empty)
 
@@ -36,7 +43,7 @@ final class RowCodec {
     // None/Left (the reader's retry-then-fail ladder), not as an untyped
     // task crash that skips the ladder
     try p.parse[String](json, CreateJacksonParser.string _,
-      (s: String) => UTF8String.fromString(s)).headOption.map(_.copy())
+      (s: String) => UTF8String.fromString(s)).headOption
     catch {
       // ONLY the parser's malformed-record signal: a broader catch would
       // relabel genuine codec bugs (or a task-cancellation interrupt) as

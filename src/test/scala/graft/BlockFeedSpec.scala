@@ -21,6 +21,34 @@ class BlockFeedSpec extends AnyFunSuite {
     opts.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
   }
 
+  test("codec: a decoded row survives the next decode on the same codec") {
+    // RowCodec hands the parser's rows out without a copy: a later parse
+    // must not overwrite a row (or its strings and arrays) decoded earlier
+    def json(kind: String, h: Long) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$T/$kind/$h.json")), "UTF-8")
+    val allOrdinals = graft.sources.BlockFeed.RawFields.indices.toArray
+    def decode(codec: graft.sources.RowCodec, h: Long) =
+      codec.rawRowChecked(json("block", h), Some(json("block_results", h)),
+        historical = true, allOrdinals, 0) match {
+        case Right(Some(row)) => row
+        case other => fail(s"$h: expected a row, got $other")
+      }
+    // both orders: a reused row buffer is overwritten in place by a smaller
+    // payload, and only moved (leaving the first row intact) by a larger one
+    val txs = Map(2270408L -> 4, 2270381L -> 8)
+    for ((first, second) <- Seq((2270408L, 2270381L), (2270381L, 2270408L))) {
+      val codec = new graft.sources.RowCodec
+      val a = decode(codec, first)
+      val b = decode(codec, second)
+      assert(a.getLong(0) === first && b.getLong(0) === second)
+      assert(a.getInt(3) === txs(first) && b.getInt(3) === txs(second),
+        "both blocks carry txs")
+      assert(a === decode(new graft.sources.RowCodec, first),
+        s"decoding $second changed the row decoded from $first")
+      assert(a !== b)
+    }
+  }
+
   test("codec: degenerate payloads stay on the contract, never untyped crashes") {
     // r13 review pins: (1) a results payload whose result struct is null
     // degrades to null event columns (best-effort left-join parity), not an

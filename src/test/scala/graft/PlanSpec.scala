@@ -657,6 +657,16 @@ class PlanSpec extends AnyFunSuite {
       !plans.head.contains("ShuffledHashJoin"), plans.head)
     for (p <- plans.tail)
       assert(p.contains("ShuffledHashJoin") && !p.contains("NestedLoopJoin"), p)
+    // the edge cache is the bare union: AQE coalesces a cached plan's
+    // shuffle, so a `repartition(u)` inside it never spared a round its own
+    // edges Exchange. Each later round shuffles the edges exactly once
+    // (counted in the final plan; the string repeats the initial plan)
+    for (p <- plans) assert(!p.contains("REPARTITION_BY_COL"), p)
+    for (p <- plans.tail) {
+      val finalPlan = p.split("== Initial Plan ==").head
+      assert("Exchange hashpartitioning\\(u#\\d+L, \\d+\\), ENSURE_REQUIREMENTS".r
+        .findAllIn(finalPlan).size === 1, p)
+    }
   }
 
   test("sim7/sim17: the corpus reaches the ADC projection unexploded, never shuffled on vec_id") {
